@@ -1,42 +1,29 @@
-"""Pipeline configuration.
+"""Pipeline constants.
 
-Constants mirror the reference's fixed values so parity tests line up:
+Each value is fixed: ``run_pipeline`` passes these to the operators, whose
+own parameters stay open for tests and entry queries. The similarity and
+compile values mirror the reference's fixed values so parity tests line up:
   * similarity floor 0.25        (/root/reference/omop2obo/string_similarity.py:264)
   * similarity top_n 10          (string_similarity.py:332)
   * similarity percentile 75     (string_similarity.py:332)
   * final compile threshold 0.25 (/root/reference/main.py:107,144)
-  * TF-IDF ngram_range (1, 3)    (string_similarity.py:325)
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    """Knobs for the transcript→triples pipeline."""
-
-    ontologies: tuple[str, ...] = ("hp", "mondo")
-    # entity-linking / similarity constants (reference parity)
-    sim_floor: float = 0.25
-    sim_top_n: int = 10
-    sim_percentile: float = 75.0
-    compile_threshold: float = 0.25
-    tfidf_ngram_range: tuple[int, int] = (1, 3)
-    # mention detection
-    max_term_tokens: int = 4  # longest dictionary term, in tokens
-    # skew handling: dictionary joins broadcast while the dimension fits
-    # (no shuffle → no skew); above this row count the join shuffles, and
-    # the Zipf-skewed fact keys ("pain"-class codes at 10^12 turns) are
-    # salted across salt_buckets shuffle partitions (operators/joins.py)
-    broadcast_dim_max_rows: int = 500_000
-    salt_buckets: int = 32
-    # output partitioning (conv_id bucket count on the triple table)
-    output_buckets: int = 256
-
-
-DEFAULT_CONFIG = PipelineConfig()
+# entity-linking / similarity constants (reference parity)
+SIM_FLOOR = 0.25
+SIM_TOP_N = 10
+SIM_PERCENTILE = 75.0
+COMPILE_THRESHOLD = 0.25
+# mention detection: longest dictionary term, in tokens
+MAX_TERM_TOKENS = 4
+# skew handling: dictionary joins broadcast while the dimension fits
+# (no shuffle → no skew); above this row count the join shuffles, and
+# the Zipf-skewed fact keys ("pain"-class codes at 10^12 turns) are
+# salted across SALT_BUCKETS shuffle partitions (operators/joins.py)
+BROADCAST_DIM_MAX_ROWS = 500_000
+SALT_BUCKETS = 32
 
 # Predicates used in the emitted (subj, pred, obj) graph.
 PRED_EXACT = "omop2obo:hasExactMapping"

@@ -366,7 +366,7 @@ s_meta_triples AS (
         sim_triple_ctes = ""
         sim_triple_parts = ""
 
-    # term-mention n-gram spans, n = 1..4 (cfg.max_term_tokens)
+    # term-mention n-gram spans, n = 1..4 (config.MAX_TERM_TOKENS)
     span_branches = "\n        UNION ALL\n".join(
         f"""        SELECT conv_id, turn_idx, i - 1 AS pos, {n} AS len,
                array_to_string(t[i:i+{n - 1}], ' ') AS surface

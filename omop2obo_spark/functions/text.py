@@ -21,6 +21,11 @@ Two implementations that must stay in lock-step:
   * ``py_preprocess`` — plain Python, used on the tiny driver-side
     ontology corpus when building the broadcast TF-IDF matrix.
 ``tests/test_functions.py`` asserts they agree on a shared vector set.
+
+The word tokenizer (:func:`tokens`, ``WORD_SPLIT_PATTERN``) is separate:
+mention detection, the corpus text statistics and the transcript
+operators all split turns with it, so mention positions and corpus
+counts index the same token stream.
 """
 
 from __future__ import annotations
@@ -228,3 +233,13 @@ def preprocess_tokens_expr(col: Column) -> Column:
     """Full preprocessing → ``array<string>`` of lemmatized tokens (native)."""
     tokens = F.filter(F.split(normalize_text(col), "\\W+"), lambda x: x != "")
     return F.transform(tokens, _lemma_lite_expr)
+
+
+# the Arrow mention scan (plans/mention.py) splits with this same pattern in
+# Python, so its token positions match the Spark expression's
+WORD_SPLIT_PATTERN = r"[^a-z0-9']+"
+
+
+def tokens(col: Column) -> Column:
+    """Lower-case word tokens of ``col`` as ``array<string>`` (native)."""
+    return F.filter(F.split(F.lower(col), WORD_SPLIT_PATTERN), lambda x: x != "")

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from omop2obo_spark.functions.text import STOPWORDS
+from omop2obo_spark.functions.text import STOPWORDS, tokens
 
 # tiny per-language function-word profiles for the n-gram/stopword heuristic
 LANG_PROFILES = {
@@ -16,10 +16,6 @@ LANG_PROFILES = {
     "fr": ["le", "la", "les", "et", "des", "est", "pour", "dans", "une", "que"],
     "es": ["el", "la", "los", "de", "y", "es", "para", "con", "una", "por"],
 }
-
-
-def tokens(col: Column) -> Column:
-    return F.filter(F.split(F.lower(col), r"[^a-z0-9']+"), lambda x: x != "")
 
 
 def whitespace_token_count(col: Column) -> Column:
@@ -688,7 +684,8 @@ def bpe_pair_counts(
 
     Words come from the same ASCII pretokenizer as
     :func:`top_k_vocabulary` (``tokens()``: lower + split on
-    ``[^a-z0-9']+``) so the pair alphabet is engine-portable.
+    ``functions.text.WORD_SPLIT_PATTERN``) so the pair alphabet is
+    engine-portable.
 
     Scale shape: the pair stream is generated with native HOFs
     (``sequence`` + ``transform`` + ``explode`` — no UDF, stays inside

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from omop2obo_spark.functions.text import tokens as word_tokens
+
 
 def conversation_stats(transcripts: DataFrame) -> DataFrame:
     """Per-conversation structural signals, one row per conv_id:
@@ -285,9 +287,7 @@ def topic_segments(
     array_union) — no token explode, no self-join; token arrays move
     through exactly one exchange.
     """
-    from omop2obo_spark.operators.textstats import tokens as word_tokens
-
-    # textstats.tokens is THE corpus tokenizer (sketch/bm25/vocab share it);
+    # functions.text.tokens is THE corpus tokenizer (sketch/bm25/vocab share it);
     # composing it here keeps the boundary signal on the same token stream
     toks = F.array_distinct(word_tokens(F.coalesce(F.col(text_col), F.lit(""))))
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -352,9 +352,7 @@ def resolve_pronouns(
         .agg(F.max(F.struct(F.col("pos"), F.col("surface"))).alias("__m"))
         .select("conv_id", "turn_idx", F.col("__m.surface").alias("__anchor"))
     )
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"[^a-z0-9']+"), lambda t: t != F.lit("")
-    )
+    toks = word_tokens(F.col("text"))
     pron_arr = F.array(*[F.lit(p) for p in pronouns])
     # try_element_at: a turn with no cue yields NULL, not an index error
     first_pron = F.try_element_at(

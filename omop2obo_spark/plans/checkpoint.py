@@ -109,10 +109,12 @@ def run_partitioned(
             else {}
         )
         n = sum(written.values())
-        wall_ms = int((time.time() - t0) * 1000)
-        for p in part_ids:
+        # the batch ran as one job: split its wall across the partitions
+        # so the shares sum to it exactly (manifest_audit sums wall_ms)
+        share, extra = divmod(int((time.time() - t0) * 1000), len(part_ids))
+        for k, p in enumerate(part_ids):
             sink.record(run_id, p, "done", triples_out=written.get(p, 0),
-                        wall_ms=wall_ms, batch=part_ids)
+                        wall_ms=share + (k < extra), batch=part_ids)
         processed.extend(part_ids)
         total_rows += n
 

@@ -2,17 +2,21 @@
 
 The reference has no mention detector (its input rows *are* the mentions);
 this stage is what adapts its linking semantics to free text. Two mention
-kinds, both found with native expressions (no Python in the scan path):
+kinds:
 
 * **code mentions** — ``prefix:id`` tokens (``snomedct_us:190787008``,
-  ``umls:c0000744``) extracted with ``regexp_extract_all``;
-* **term mentions** — token n-grams (n ≤ max_term_tokens) joined against
-  the broadcast dictionary of lower-cased labels+synonyms. The explode
-  multiplies rows by ~4× tokens-per-turn but stays inside whole-stage
-  codegen and is filtered immediately by the broadcast hash join — no
-  shuffle touches the fact table. Longest-match-wins: a matched span
-  strictly contained in another matched span of the same turn is dropped
-  (so "nausea and vomiting" doesn't also emit "nausea").
+  ``umls:c0000744``);
+* **term mentions** — token n-grams (n ≤ max_term_tokens) that equal a
+  lower-cased dictionary label or synonym. Longest-match-wins: a matched
+  span strictly contained in another matched span of the same turn is
+  dropped (so "nausea and vomiting" doesn't also emit "nausea").
+
+:func:`detect_mentions` finds both in one Arrow-batched scan; it is what
+the pipeline runs. :func:`detect_code_mentions` and
+:func:`detect_term_mentions` state the same semantics as declarative
+Spark plans (``regexp_extract_all``; n-gram explode + broadcast join +
+per-turn groupBy). Tests use them as the reference for the scan, and
+entry queries call :func:`detect_term_mentions`.
 
 Output schema (one row per mention):
     conv_id, turn_idx, mention_id, pos, kind ('code'|'term'), surface
@@ -23,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from omop2obo_spark.functions.text import WORD_SPLIT_PATTERN, tokens
 
 CODE_PATTERN = r"\b([a-z][a-z0-9_.\-]*:[a-z0-9][a-z0-9.\-]*)"
 
@@ -57,7 +63,7 @@ def detect_term_mentions(
     ``term_dim`` must have a single ``surface`` column of distinct
     lower-cased dictionary strings (labels + synonyms).
     """
-    toks = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9']+"), lambda x: x != "")
+    toks = tokens(F.col("text"))
     # all n-grams with start position and length, built as one nested
     # transform → flatten (single generate, no UDF)
     grams = F.flatten(
@@ -114,13 +120,14 @@ def detect_term_mentions(
     )
 
 
-def detect_mentions_arrow(
+def detect_mentions(
     transcripts: DataFrame, term_dim: DataFrame, max_term_tokens: int = 4
 ) -> DataFrame:
-    """Single-pass Arrow-batched mention detector — the scale engine.
+    """Code and term mentions in one Arrow-batched scan.
 
     Semantics are IDENTICAL to ``detect_code_mentions ∪
-    detect_term_mentions`` (tested by tests/test_operators.py parity), but
+    detect_term_mentions`` over the key-filtered input (tested by the
+    parity tests in tests/test_operators.py and tests/test_plans.py), but
     the physical plan is one ``mapInPandas`` scan:
 
       * no 16× n-gram row explode — candidate spans are checked in-place
@@ -128,7 +135,7 @@ def detect_mentions_arrow(
         dictionary probe is one dict lookup per token plus rare tuple
         compares, not a string build + hash join per n-gram;
       * no shuffle — longest-match-wins runs per turn inside the batch
-        (the declarative engine needs a groupBy(conv, turn) over all
+        (the declarative reference needs a groupBy(conv, turn) over all
         matched spans);
       * no collect_list struct churn — the JVM explode/agg path allocates
         per-span structs that dominate GC at cluster scale (measured: the
@@ -145,6 +152,11 @@ def detect_mentions_arrow(
     import pandas as pd
     from pyspark.sql import types as T
 
+    # rows without a turn key cannot be addressed (mention_id embeds it);
+    # the declarative reference would render 'c1::code:0' for them
+    transcripts = transcripts.filter(
+        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+    )
     # broadcast first-token index: tok0 -> list of token tuples
     terms = [r.surface for r in term_dim.select("surface").distinct().collect()]
     index: dict[str, list[tuple[str, ...]]] = {}
@@ -154,10 +166,10 @@ def detect_mentions_arrow(
             index.setdefault(tt[0], []).append(tt)
     bc = transcripts.sparkSession.sparkContext.broadcast(index)
 
-    tok_re = re.compile(r"[^a-z0-9']+")
+    tok_re = re.compile(WORD_SPLIT_PATTERN)
     # \b parity verified empirically (test_detect_mentions_null_turn_key_
     # and_unicode_parity): Java's \b is unicode-aware like Python's default
-    # — 'naïve:abc' yields no code mention in either engine; do NOT compile
+    # — 'naïve:abc' yields no code mention in either plan; do NOT compile
     # with re.ASCII, which WOULD make Python alone match 've:abc'
     code_re = re.compile(CODE_PATTERN)
 
@@ -178,11 +190,11 @@ def detect_mentions_arrow(
             conv_o, turn_o, mid_o, pos_o, kind_o, surf_o = [], [], [], [], [], []
             for conv, turn, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 # NULL text (e.g. a PERMISSIVE JSONL row missing the field)
-                # yields no mentions — same as the SQL engine, where
-                # F.lower(NULL) joins/matches nothing. NULL keys are
-                # unaddressable (dispatcher filters them; guard again for
-                # direct callers) — and one NaN in the batch makes pandas
-                # render EVERY turn as float ('1.0'), so re-int per row.
+                # yields no mentions — same as the declarative reference,
+                # where F.lower(NULL) joins/matches nothing. NULL keys are
+                # unaddressable (filtered above; guarded again here) — and
+                # one NaN in the batch makes pandas render EVERY turn as
+                # float ('1.0'), so re-int per row.
                 if not isinstance(text, str) or conv is None or pd.isna(turn):
                     continue
                 turn = int(turn)
@@ -213,30 +225,6 @@ def detect_mentions_arrow(
             )
 
     return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(scan, schema)
-
-
-def detect_mentions(
-    transcripts: DataFrame, term_dim: DataFrame, max_term_tokens: int = 4,
-    engine: str = "arrow",
-) -> DataFrame:
-    """Union of code and term mentions.
-
-    ``engine='arrow'`` (default): single-pass mapInPandas scan — no explode,
-    no shuffle (see :func:`detect_mentions_arrow`). ``engine='sql'``: the
-    fully declarative explode + broadcast-join + groupBy plan. Identical
-    output either way.
-    """
-    # rows without a turn key cannot be addressed (mention_id embeds it):
-    # drop them identically in BOTH engines — concat_ws would silently
-    # render 'c1::code:0' in SQL while the arrow scan rendered NaN
-    transcripts = transcripts.filter(
-        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-    )
-    if engine == "arrow":
-        return detect_mentions_arrow(transcripts, term_dim, max_term_tokens)
-    return detect_code_mentions(transcripts).unionByName(
-        detect_term_mentions(transcripts, term_dim, max_term_tokens)
-    )
 
 
 NEGATION_CUES = (
@@ -270,7 +258,7 @@ def flag_phrase_context(
     """
     ptoks = [t for t in phrase.lower().split() if t]
     k = len(ptoks)
-    toks = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9']+"), lambda x: x != "")
+    toks = tokens(F.col("text"))
     turns = transcripts.select("conv_id", "turn_idx", toks.alias("__toks"))
     start = F.greatest(F.col("pos") - F.lit(k) + F.lit(1), F.lit(1))
     n_prev = F.least(F.lit(k), F.col("pos"))
@@ -306,7 +294,7 @@ def flag_negated_mentions(
     ≤window-token slice, inside whole-stage codegen. No UDF, no
     broadcast of anything corpus-sized.
     """
-    toks = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9']+"), lambda x: x != "")
+    toks = tokens(F.col("text"))
     turns = transcripts.select("conv_id", "turn_idx", toks.alias("__toks"))
     cue_arr = F.array(*[F.lit(c) for c in cues])
     start = F.greatest(F.col("pos") - F.lit(window) + F.lit(1), F.lit(1))

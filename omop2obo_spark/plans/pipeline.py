@@ -31,7 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omop2obo_spark.config import (
-    DEFAULT_CONFIG,
+    BROADCAST_DIM_MAX_ROWS,
+    COMPILE_THRESHOLD,
+    MAX_TERM_TOKENS,
     PRED_CATEGORY,
     PRED_CONSTRUCTOR,
     PRED_EVIDENCE,
@@ -39,7 +41,10 @@ from omop2obo_spark.config import (
     PRED_MENTION_OF,
     PRED_SEMTYPE,
     PRED_SIMILARITY,
-    PipelineConfig,
+    SALT_BUCKETS,
+    SIM_FLOOR,
+    SIM_PERCENTILE,
+    SIM_TOP_N,
 )
 from omop2obo_spark.functions.normalize import normalize_source_codes, uri_ont_type
 from omop2obo_spark.functions.text import preprocess_tokens_expr
@@ -155,11 +160,9 @@ def run_pipeline(
     mrconso: DataFrame | None = None,
     mrsty: DataFrame | None = None,
     ancestors: DataFrame | None = None,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
     with_similarity: bool = True,
     persist: bool = True,
     dims: LexiconDims | None = None,
-    timings: dict[str, float] | None = None,
     double_merge: bool = True,
     checkpoint_dir: str | None = None,
     assume_unique_turns: bool = True,
@@ -177,17 +180,8 @@ def run_pipeline(
     these same boundaries are where the checkpoint manifests write durable
     parquet instead (plans/checkpoint.py), which truncates lineage too.
     """
-    import time as _time
-
-    _t0 = _time.time()
-
-    def _mark(name: str) -> None:
-        if timings is not None:
-            timings[name] = round(_time.time() - _t0, 2)
-
     dims = dims or LexiconDims.from_lexicon(lexicon, vocab_map)
     term_dim = dims.strings.select(F.col("CODE").alias("surface"))
-    _mark("dims_ready")
 
     def _checkpoint(df: DataFrame, name: str) -> DataFrame:
         """Eager stage-boundary materialization + lineage truncation.
@@ -204,7 +198,7 @@ def run_pipeline(
         return df.localCheckpoint(eager=True)
 
     # ---- stage 1: mention detection -------------------------------------
-    mentions = detect_mentions(transcripts, term_dim, cfg.max_term_tokens)
+    mentions = detect_mentions(transcripts, term_dim, MAX_TERM_TOKENS)
     if persist:
         # EAGER stage-boundary checkpoint. Lineage truncation must happen
         # before downstream plans are *constructed*, not just executed:
@@ -214,7 +208,6 @@ def run_pipeline(
         # killer, since it doesn't shrink with more cores). Eager
         # materialization converts it into parallel cluster work.
         mentions = _checkpoint(mentions, "mentions")
-    _mark("mentions_ckpt")
 
     # ---- stage 2: entity linking ----------------------------------------
     code_stack = _stack_code_mentions(mentions, vocab_map)
@@ -225,12 +218,10 @@ def run_pipeline(
         # broadcast builds need no cluster job (see linking.localize_dim).
         # A production-scale MRCONSO that exceeds the broadcast budget
         # falls back to persist() + SALTED shuffle joins: the fact side's
-        # Zipf-skewed codes are spread over cfg.salt_buckets partitions.
+        # Zipf-skewed codes are spread over SALT_BUCKETS partitions.
         from omop2obo_spark.operators.linking import localize_dim_checked
 
-        umls_prepped, fits = localize_dim_checked(
-            umls_prepped, cfg.broadcast_dim_max_rows
-        )
+        umls_prepped, fits = localize_dim_checked(umls_prepped, BROADCAST_DIM_MAX_ROWS)
         if not fits:
             umls_strategy = "salted"
 
@@ -239,7 +230,7 @@ def run_pipeline(
         umls_map = umls_annotate(
             code_stack.filter(F.col("CODE_COLUMN") == "TURN_CODE"),
             umls_prepped, mrsty, KEY_COLS, "CODE", double_merge=double_merge,
-            dedup=False, strategy=umls_strategy, salt_buckets=cfg.salt_buckets,
+            dedup=False, strategy=umls_strategy, salt_buckets=SALT_BUCKETS,
         )
         # stack UMLS-derived codes back in (the reference's subsetter over
         # [code, UMLS_CODE, UMLS_CUI])
@@ -355,7 +346,6 @@ def run_pipeline(
         # the unlinked anti-join); with sim off it has a single consumer
         # and staying lazy lets Catalyst fuse the whole tail into one job.
         exact = _checkpoint(exact, "exact_links")
-    _mark("linking_built")
 
     # ---- stage 2e: TF-IDF similarity tier -------------------------------
     # idf is fit over ALL turn strings ∪ ontology strings — the reference
@@ -383,11 +373,9 @@ def run_pipeline(
             # exception map are large enough that every plan embedding
             # them pays seconds of driver-side codegen per plan shape
             all_queries = _checkpoint(all_queries, "sim_queries")
-        _mark("sim_queries_ckpt")
         ont_corpus = build_ont_corpus(lexicon)
         norms, ont_vocab_df, n_docs = distributed_query_stats(all_queries, ont_corpus)
         model = fit_tfidf_ont_vocab(ont_corpus, ont_vocab_df, n_docs)
-        _mark("sim_stats")
 
         linked_turns = exact.select("conv_id", "turn_idx").distinct()
         unlinked = all_queries.join(
@@ -404,11 +392,11 @@ def run_pipeline(
             .join(norms.withColumnRenamed("k", "__k"), on="__k", how="left")
         )
         raw_scores = similarity_scores(
-            spark, distinct_unl, model, id_col="__k", top_n=cfg.sim_top_n,
-            floor=cfg.sim_floor, norm_col="norm",
+            spark, distinct_unl, model, id_col="__k", top_n=SIM_TOP_N,
+            floor=SIM_FLOOR, norm_col="norm",
         )
         key_matches = filter_similarity_matches(
-            raw_scores, percentile=cfg.sim_percentile
+            raw_scores, percentile=SIM_PERCENTILE
         ).withColumnRenamed("mention_id", "__k")
         sim_matches = key_matches.join(
             unlinked.select("__k", *KEY_COLS), on="__k", how="inner"
@@ -416,10 +404,9 @@ def run_pipeline(
 
     # ---- stage 3: canonicalization --------------------------------------
     leftover_caches: list[DataFrame] = []
-    mappings = compile_mappings(exact, sim_matches, dims.labels, KEY_COLS, cfg.compile_threshold)
+    mappings = compile_mappings(exact, sim_matches, dims.labels, KEY_COLS, COMPILE_THRESHOLD)
     if persist and with_similarity:
         mappings = _checkpoint(mappings, "mappings")
-        _mark("mappings_ckpt")
         # the eager checkpoint has fully executed the similarity scoring,
         # so the corpus-stats caches inside distributed_query_stats are
         # done serving the hot path; release the executor memory (a later
@@ -434,7 +421,6 @@ def run_pipeline(
 
     # ---- stage 4: triple materialization ---------------------------------
     triples = build_triples(mentions, mappings, semtypes, assume_unique_turns)
-    _mark("plan_built")
 
     return PipelineResult(
         mentions=mentions,

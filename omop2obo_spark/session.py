@@ -65,9 +65,9 @@ def get_spark(
         # Keep scans right-sized: at 100 TB this bounds task input size.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        # UI off by default (startup cost); SPARK_GRAFT_UI=1 enables it for
-        # stage-metric profiling (tools/profile_scaling.py REST reads)
-        .config("spark.ui.enabled", "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
+        # UI off (startup cost); stage metrics come from the event log
+        # (perfbench/), and a caller that wants the UI passes extra_conf
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Throughput GC: the ordered-concat/canonicalization aggregations
         # allocate heavily (collect_list of structs); measured on this

@@ -287,3 +287,21 @@ def test_manifest_audit_lineage_and_crash_window(spark, tmp_path):
     assert got[1]["last_run_id"] == "runB"
     assert got[2]["last_status"] == "pending" and got[2]["crash_window"] is True
     assert got[2]["rows"] == 0
+
+
+def test_audit_wall_sums_to_batch_wall(spark, tmp_path):
+    """One batch of 4 buckets: the per-partition wall_ms shares summed by
+    the audit must not exceed the run's own wall (each partition carries
+    a share of the batch wall, not the whole of it)."""
+    import time
+
+    from omop2obo_spark.sources.writers import manifest_audit
+
+    t = FX.transcripts_df(spark, 20, 4)
+    sink = GraphSink(str(tmp_path / "w"), n_buckets=4)
+    t0 = time.time()
+    run_partitioned(spark, t, _builder(spark), sink)
+    wall_ms = (time.time() - t0) * 1000
+    audit = manifest_audit(spark, sink).collect()
+    assert len(audit) == 4
+    assert 0 < sum(r.total_wall_ms for r in audit) <= wall_ms

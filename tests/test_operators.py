@@ -208,16 +208,21 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_mention_engines_identical(spark):
-    """Arrow single-pass detector == declarative explode/join/groupBy plan,
-    row for row, over skewed synthetic transcripts."""
+    """Arrow single-pass detector == declarative explode/join/groupBy plan
+    (code ∪ term mentions over the key-filtered input), row for row, over
+    skewed synthetic transcripts."""
     from omop2obo_spark import fixtures as FX
     from omop2obo_spark.fixtures.generators import transcripts_df, vocab_map_dict
     from omop2obo_spark.operators.linking import LexiconDims
-    from omop2obo_spark.plans.mention import detect_mentions
+    from omop2obo_spark.plans.mention import (
+        detect_code_mentions,
+        detect_mentions,
+        detect_term_mentions,
+    )
 
     tr = transcripts_df(spark, n_convs=80, turns_per_conv=5)
     # NULL text (a PERMISSIVE JSONL row missing the field) must yield no
-    # mentions in BOTH engines, not crash the arrow scan
+    # mentions in either plan, not crash the arrow scan
     null_row = spark.sql(
         "select 'cNULL' conv_id, cast(0 as int) turn_idx, 'user' role,"
         " cast(null as string) text, cast(null as string) tool,"
@@ -228,8 +233,9 @@ def test_mention_engines_identical(spark):
     from pyspark.sql import functions as F
 
     term_dim = dims.strings.select(F.col("CODE").alias("surface"))
-    a = detect_mentions(tr, term_dim, 4, engine="arrow")
-    b = detect_mentions(tr, term_dim, 4, engine="sql")
+    a = detect_mentions(tr, term_dim, 4)
+    keyed = tr.filter(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
+    b = detect_code_mentions(keyed).unionByName(detect_term_mentions(keyed, term_dim, 4))
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb and len(ra) > 0
@@ -429,8 +435,9 @@ def test_term_mentions_on_turns_shorter_than_max_ngram(spark):
     """Regression: a turn with fewer tokens than max_term_tokens used to
     crash span generation (sequence(0, size-n) descends when size < n and
     slice() rejects start 0). Single- and zero-token turns must simply
-    yield their possible spans, in BOTH engines."""
-    from omop2obo_spark.plans.mention import detect_mentions_arrow, detect_term_mentions
+    yield their possible spans, in the Arrow scan and its declarative
+    reference."""
+    from omop2obo_spark.plans.mention import detect_mentions, detect_term_mentions
 
     tr = spark.createDataFrame(
         [("c1", 0, "headache"), ("c2", 0, ""), ("c3", 0, "a b"),
@@ -446,7 +453,7 @@ def test_term_mentions_on_turns_shorter_than_max_ngram(spark):
                            ("c4", "headache", 3)}
     arrow = {
         (r.conv_id, r.surface, r.pos)
-        for r in detect_mentions_arrow(tr, terms).collect()
+        for r in detect_mentions(tr, terms).collect()
         if r.kind == "term"
     }
     assert arrow == declarative

@@ -400,10 +400,15 @@ def test_label_propagation_broadcasts_labels_edges_never_sort_merge(spark):
 
 
 def test_detect_mentions_null_turn_key_and_unicode_parity(spark):
-    """NULL turn keys are dropped identically by both engines, and the
-    ASCII \\b flag keeps code extraction identical across engines on
+    """The Arrow scan drops NULL turn keys and matches its declarative
+    reference (code ∪ term mentions over the key-filtered input); the
+    ASCII \\b flag keeps code extraction identical across the two on
     accented text; a NaN-poisoned batch must not float-render turn ids."""
-    from omop2obo_spark.plans.mention import detect_mentions
+    from omop2obo_spark.plans.mention import (
+        detect_code_mentions,
+        detect_mentions,
+        detect_term_mentions,
+    )
 
     tr = spark.createDataFrame(
         [
@@ -414,11 +419,13 @@ def test_detect_mentions_null_turn_key_and_unicode_parity(spark):
         "conv_id string, turn_idx int, text string",
     )
     term_dim = spark.createDataFrame([("fever",)], "surface string")
-    outs = {}
-    for engine in ("arrow", "sql"):
-        rows = detect_mentions(tr, term_dim, engine=engine).collect()
-        outs[engine] = sorted((r.conv_id, r.turn_idx, r.mention_id, r.kind, r.surface)
-                              for r in rows)
+    keyed = tr.filter(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
+    reference = detect_code_mentions(keyed).unionByName(detect_term_mentions(keyed, term_dim))
+    outs = {
+        name: sorted((r.conv_id, r.turn_idx, r.mention_id, r.kind, r.surface)
+                     for r in df.collect())
+        for name, df in (("arrow", detect_mentions(tr, term_dim)), ("sql", reference))
+    }
     assert outs["arrow"] == outs["sql"]
     ids = [m for (_c, _t, m, _k, _s) in outs["arrow"]]
     assert all(":None:" not in m and "nan" not in m and ".0" not in m for m in ids)
