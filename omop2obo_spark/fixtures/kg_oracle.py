@@ -448,7 +448,9 @@ term_mentions AS MATERIALIZED (
            surface
     FROM tkept
 ),
--- stage 2a: stack code mentions + normalize (pipeline._stack_code_mentions)
+-- stage 2a: normalize + stack code mentions. The normalized code is the
+-- pipeline's link key; the stacking is operators.linking.build_link_dim's,
+-- replayed here per mention (2a-2d: the link dimension's tiers)
 codenorm AS (
     SELECT conv_id, turn_idx, mention_id, surface,
            CASE WHEN seg IS NULL THEN NULL
@@ -536,7 +538,8 @@ dbx_links AS (
     FROM (SELECT * FROM dbx_direct UNION ALL SELECT * FROM ananke) b
     LEFT JOIN {labels_v} ON b.uri = labdim.uri
 ),
--- stage 2d: exact string tier — operators.linking.exact_string_link
+-- stage 2d: exact string tier — operators.linking.exact_string_link (the
+-- pipeline keys it by the lower-cased surface)
 str_links AS (
     SELECT DISTINCT m.conv_id, m.turn_idx, m.mention_id, m.surface AS code,
            'MENTION_LABEL' AS code_column, sd.uri, {ont_type_of("sd.uri")} AS ont_type, labdim.label,

@@ -29,15 +29,33 @@ def broadcast_join(
     return fact.join(F.broadcast(dim), on=on, how=how)
 
 
+def dim_join(
+    fact: DataFrame,
+    dim: DataFrame,
+    on: str | list[str],
+    how: str = "inner",
+    salt_buckets: int | None = None,
+    salt_cols: list[str] | None = None,
+) -> DataFrame:
+    """Join a dictionary-sized ``dim``: broadcast, or — with
+    ``salt_buckets``, for a dim above the broadcast budget — a shuffle join
+    that salts the fact side's skewed keys (:func:`salted_join`)."""
+    if salt_buckets is None:
+        return broadcast_join(fact, dim, on, how)
+    return salted_join(
+        fact, dim, on=on, salt_buckets=salt_buckets, fact_salt_cols=salt_cols, how=how
+    )
+
+
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
-    on: str,
+    on: str | list[str],
     salt_buckets: int = 32,
     fact_salt_cols: list[str] | None = None,
     how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join on ``on``.
+    """Skew-resistant equi-join on ``on`` (one key column or several).
 
     The fact side gets ``salt = pmod(xxhash64(<stable cols>), k)`` (stable
     columns, not rand(), so retries/resume are deterministic); the dim side
@@ -48,7 +66,7 @@ def salted_join(
         fact: large, potentially skewed side.
         dim: small-to-medium side (replicated k×; must fit k× in the
             shuffle, which holds for dictionary-scale tables).
-        on: equality key column name (must exist on both sides).
+        on: equality key column name(s) (must exist on both sides).
         salt_buckets: k.
         fact_salt_cols: columns used to derive the deterministic salt;
             defaults to the join key + all fact columns' hash — pass the
@@ -72,7 +90,8 @@ def salted_join(
     salted_dim = dim.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
     )
-    out = salted_fact.join(salted_dim, on=[on, "__salt"], how=how)
+    keys = [on] if isinstance(on, str) else list(on)
+    out = salted_fact.join(salted_dim, on=[*keys, "__salt"], how=how)
     return out.drop("__salt")
 
 

@@ -2,13 +2,17 @@
 matching — the Spark re-expression of the reference's ConceptAnnotator
 (/root/reference/omop2obo/clinical_concept_annotator.py).
 
-All functions are DataFrame→DataFrame and generic over the key columns, so
-the same operators serve both the reference-parity path (key=CONCEPT_ID)
-and the transcripts path (key=(conv_id, turn_idx, mention_idx)).
+The tier functions are DataFrame→DataFrame and generic over the key
+columns: they serve the reference-parity path (key=CONCEPT_ID), the
+streaming path and the link dimension. Every tier depends only on a
+mention's normalized code or lower-cased surface, never on its turn, so
+:func:`build_link_dim` runs them once over that key domain into one
+dimension keyed by ``(kind, LINK_KEY)``, and the pipeline links each
+mention with a single lookup into it (:meth:`LinkDim.lookup`).
 
 The link-candidate output schema is shared by every tier:
     <key cols>, CODE, CODE_COLUMN, URI, ONT_TYPE, LABEL, EVIDENCE,
-    src_rank, tier_rank
+    MATCH_KIND, MATCH_SUBTYPE, src_rank, tier_rank
 ``src_rank``/``tier_rank`` are explicit ordering keys replacing pandas'
 implicit concat order (label-pass before synonym-pass, exact-dbxref before
 ananke, etc.) so downstream order-preserving aggregation is deterministic.
@@ -16,7 +20,7 @@ ananke, etc.) so downstream order-preserving aggregation is deterministic.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,12 +30,15 @@ from omop2obo_spark.functions.normalize import (
     uri_ont_type,
     uri_to_code,
 )
-from omop2obo_spark.operators.joins import broadcast_join
+from omop2obo_spark.operators.aggregate import ordered_concat_agg
+from omop2obo_spark.operators.joins import broadcast_join, dim_join
 
 LINK_VALUE_COLS = [
     "CODE", "CODE_COLUMN", "URI", "ONT_TYPE", "LABEL", "EVIDENCE",
     "MATCH_KIND", "MATCH_SUBTYPE", "src_rank", "tier_rank",
 ]
+# a mention's kind ('code'|'term') and its lookup key into the link dimension
+LINK_KEY_COLS = ["kind", "LINK_KEY"]
 
 
 def localize_dim(df: DataFrame, max_rows: int = 500_000) -> DataFrame:
@@ -50,7 +57,7 @@ def localize_dim(df: DataFrame, max_rows: int = 500_000) -> DataFrame:
 def localize_dim_checked(df: DataFrame, max_rows: int = 500_000) -> tuple[DataFrame, bool]:
     """Like :func:`localize_dim` but also reports whether the dimension fit
     (→ broadcast joins) or not (→ shuffle joins, where the caller should
-    salt skewed fact keys — see umls_annotate(strategy='salted')).
+    salt skewed fact keys — see :meth:`LinkDim.lookup`).
 
     The local rebuild goes through pandas: ``createDataFrame`` from Python
     rows yields a ``Scan ExistingRDD`` (parallelized — every broadcast
@@ -96,6 +103,21 @@ class LexiconDims:
     strings: DataFrame
     labels: DataFrame
     ont_keys: list[str]
+    _link_dim: LinkDim | None = field(default=None, repr=False, compare=False)
+
+    def link_dim(
+        self, mrconso: DataFrame | None, mrsty: DataFrame | None, vocab_map: dict[str, str],
+        max_rows: int, salt_buckets: int,
+    ) -> LinkDim:
+        """The link dimension for these views, MRCONSO, MRSTY and vocab map;
+        built on first use and kept while the same objects come back, so a
+        partitioned run's batches share one build."""
+        built = self._link_dim
+        src = built.sources if built is not None else None
+        if src is None or src[0] is not mrconso or src[1] is not mrsty or src[2] != vocab_map:
+            built = build_link_dim(self, mrconso, mrsty, vocab_map, max_rows, salt_buckets)
+            self._link_dim = built
+        return built
 
     @classmethod
     def from_lexicon(cls, lexicon: DataFrame, vocab_map: dict[str, str]) -> "LexiconDims":
@@ -181,7 +203,6 @@ def umls_annotate(
     key_cols: list[str],
     code_col: str,
     double_merge: bool = True,
-    dedup: bool = True,
     strategy: str = "broadcast",
     salt_buckets: int = 32,
 ) -> DataFrame:
@@ -193,51 +214,28 @@ def umls_annotate(
     absent from the input — the CUI cross-reference expansion tier.
 
     ``umls`` must be pre-processed by :func:`prepare_mrconso`.
-    ``strategy='broadcast'`` while MRCONSO fits executor memory (~10M rows
-    ≈ 300 MB is still broadcastable on 8g executors). When it does not —
-    ``strategy='salted'`` — both merges become shuffle joins, and the fact
-    side's Zipf-skewed keys ("pain"-class codes dominate mention counts at
-    10^12 turns) are salted across ``salt_buckets`` shuffle partitions so
-    no single reducer owns a hot key (joins.salted_join; the north rule's
-    salted hash join for skewed high-frequency terms). Results are
-    identical either way (tests/test_operators.py).
+    ``strategy='salted'`` (for an MRCONSO above the broadcast budget) makes
+    both merges shuffle joins with the fact side's skewed keys salted over
+    ``salt_buckets`` partitions (joins.salted_join). Results are identical
+    either way (tests/test_operators.py).
     """
     u = umls.select(
         F.col("CUI").alias("UMLS_CUI"),
         F.col("SAB").alias("UMLS_SAB"),
         F.col("CODE").alias("UMLS_CODE"),
     )
-    ids = codes.select(*key_cols, code_col)
-    if dedup:
-        # pipeline input is already unique per (key, code) — mention_id is
-        # part of the key — so the hot path skips this shuffle too
-        ids = ids.dropDuplicates()
-    if strategy == "salted":
-        from omop2obo_spark.operators.joins import salted_join
-
-        m1 = salted_join(
-            ids.withColumn("UMLS_CODE", F.col(code_col)),
-            u, on="UMLS_CODE", salt_buckets=salt_buckets,
-            fact_salt_cols=key_cols,
-        ).select(*key_cols, code_col, "UMLS_CUI", "UMLS_SAB", "UMLS_CODE")
-    else:
-        m1 = ids.join(F.broadcast(u), ids[code_col] == u["UMLS_CODE"], "inner").select(
-            *key_cols, code_col, "UMLS_CUI", "UMLS_SAB", "UMLS_CODE"
-        )
+    salt = salt_buckets if strategy == "salted" else None
+    ids = codes.select(*key_cols, code_col).dropDuplicates()
+    m1 = dim_join(
+        ids.withColumn("UMLS_CODE", F.col(code_col)), u, "UMLS_CODE", salt_buckets=salt,
+        salt_cols=key_cols,
+    ).select(*key_cols, code_col, "UMLS_CUI", "UMLS_SAB", "UMLS_CODE")
+    merged = m1
     if double_merge:
         m2_left = m1.select(*key_cols, code_col, "UMLS_CUI")
-        if strategy == "salted":
-            from omop2obo_spark.operators.joins import salted_join
-
-            m2 = salted_join(
-                m2_left, u, on="UMLS_CUI", salt_buckets=salt_buckets,
-                fact_salt_cols=key_cols, how="left",
-            )
-        else:
-            m2 = m2_left.join(F.broadcast(u), on="UMLS_CUI", how="left")
-        merged = m1.unionByName(m2)
-    else:
-        merged = m1
+        merged = m1.unionByName(
+            dim_join(m2_left, u, "UMLS_CUI", "left", salt_buckets=salt, salt_cols=key_cols)
+        )
     sty = mrsty.select(F.col("CUI").alias("UMLS_CUI"), F.col("STY").alias("UMLS_SEM_TYPE"))
     out = merged.join(F.broadcast(sty), on="UMLS_CUI", how="left").select(
         *key_cols, code_col, "UMLS_CUI", "UMLS_SAB", "UMLS_CODE", "UMLS_SEM_TYPE"
@@ -274,7 +272,7 @@ def dbxref_link(
         .drop("DBX_TYPE")
     )
 
-    branches = [direct]
+    out = direct
     if umls is not None:
         # branch 2 (ananke): stacked.CODE is a UMLS CUI; umls.CODE is an
         # OBO id rendered `hp:0001901`; ont side keyed by uri_to_code(URI).
@@ -295,11 +293,7 @@ def dbxref_link(
             .withColumn("tier_rank", F.lit(1))
             .withColumn("MATCH_SUBTYPE", F.lit("DbXref"))
         )
-        if dedup:
-            ananke = ananke.dropDuplicates()
-        branches.append(ananke)
-
-    out = branches[0] if len(branches) == 1 else branches[0].unionByName(branches[1])
+        out = out.unionByName(ananke)
     out = (
         out.withColumn("MATCH_KIND", F.lit("dbxref"))
         .withColumn("ONT_TYPE", uri_ont_type(F.col("URI")))
@@ -308,8 +302,7 @@ def dbxref_link(
         .select(*key_cols, *LINK_VALUE_COLS)
     )
     # full-row distinct: deterministic set semantics (a subset dedup over
-    # rows differing in rank columns would pick an arbitrary winner).
-    # dedup=False defers the shuffle — compile output is invariant to dups.
+    # rows differing in rank columns would pick an arbitrary winner)
     return out.dropDuplicates() if dedup else out
 
 
@@ -318,7 +311,6 @@ def exact_string_link(
     dims: LexiconDims,
     key_cols: list[str],
     level: str,
-    dedup: bool = True,
 ) -> DataFrame:
     """Exact label/synonym string tier (J6).
 
@@ -327,10 +319,8 @@ def exact_string_link(
     ranked before synonym pass — the reference concats label results first),
     evidence ``CODE_COLUMN:string_with_underscores``.
 
-    This is where mention-count skew lives at transcript scale; the dim is
-    broadcast so no shuffle occurs here — skew only matters for the later
-    per-mention aggregation, which keys on (conv, turn, mention) and is
-    therefore skew-free.
+    The pipeline runs it once over the dictionary strings
+    (:func:`build_link_dim`), so mention-count skew never reaches it.
     """
     lowered = stacked_strings.withColumn("CODE", F.lower(F.col("CODE")))
     matched = broadcast_join(lowered, dims.strings, on="CODE")
@@ -347,4 +337,98 @@ def exact_string_link(
         .select(*key_cols, *LINK_VALUE_COLS)
     )
     # full-row distinct — see dbxref_link
-    return out.dropDuplicates() if dedup else out
+    return out.dropDuplicates()
+
+
+@dataclass
+class LinkDim:
+    """Every linking tier as rows keyed by ``(kind, LINK_KEY)``:
+    ``links`` (``*LINK_VALUE_COLS``: a mention's concept-level links; term
+    rows carry the ``MENTION_LABEL`` channel) and ``semtypes`` (per-code
+    ``UMLS_CUI, UMLS_SEM_TYPE`` concat; None without MRCONSO + MRSTY).
+    Both are localized; above the broadcast budget they are persisted and
+    looked up through a salted join over ``salt_buckets`` partitions.
+    """
+
+    links: DataFrame
+    semtypes: DataFrame | None
+    salt_buckets: int | None  # None: broadcast
+    sources: tuple  # (mrconso, mrsty, vocab_map) it was built from
+
+    def lookup(self, keys: DataFrame, dim: DataFrame, key_cols: list[str]) -> DataFrame:
+        """Inner-join ``keys`` (key_cols + LINK_KEY_COLS) with ``dim``."""
+        return dim_join(keys, dim, LINK_KEY_COLS, salt_buckets=self.salt_buckets, salt_cols=key_cols)
+
+
+def build_link_dim(
+    dims: LexiconDims,
+    mrconso: DataFrame | None,
+    mrsty: DataFrame | None,
+    vocab_map: dict[str, str],
+    max_rows: int,
+    salt_buckets: int,
+) -> LinkDim:
+    """Run the tiers once over the key domain (see :class:`LinkDim`).
+
+    Code keys are ``normalize_source_codes`` codes: dbxref codes, prepared
+    MRCONSO codes and ``umls:<cui>`` (a mention normalizes to ``prefix:id``
+    with a colon-free id, so no other code reaches a tier), stacked like
+    the reference's clinical rows (data_utils.py:44-81): the code (src_rank
+    0), a ``umls:c…`` code's bare CUI (1), its UMLS merge-1/2 codes (2) and
+    CUIs (3). Term keys are the lower-cased dictionary strings.
+    """
+    key = ["LINK_KEY"]
+    umls, strategy = None, "broadcast"
+    if mrconso is not None:
+        umls, fits = localize_dim_checked(prepare_mrconso(mrconso, vocab_map), max_rows)
+        strategy = "broadcast" if fits else "salted"
+    codes = dims.dbxref.select("CODE")
+    if umls is not None:
+        codes = codes.unionByName(umls.select("CODE")).unionByName(
+            umls.select(F.concat(F.lit("umls:"), F.lower("CUI")).alias("CODE"))
+        )
+    codes = codes.where(F.col("CODE").isNotNull()).distinct().withColumn("LINK_KEY", F.col("CODE"))
+
+    def stacked(df: DataFrame, code: str, code_column: str, rank: int) -> DataFrame:
+        return df.select(
+            *key, F.col(code).alias("CODE"), F.lit(code_column).alias("CODE_COLUMN"),
+            F.lit(rank).alias("src_rank"),
+        ).where(F.col("CODE").isNotNull())
+
+    stack = stacked(codes, "CODE", "TURN_CODE", 0).unionByName(
+        stacked(
+            codes.filter(F.col("CODE").startswith("umls:c")).withColumn(
+                "CUI", F.upper(F.element_at(F.split(F.col("CODE"), ":"), -1))
+            ),
+            "CUI", "UMLS_CUI", 1,
+        )
+    )
+    semtypes = None
+    if umls is not None and mrsty is not None:
+        umls_map = umls_annotate(
+            codes, umls, mrsty, key, "CODE", strategy=strategy, salt_buckets=salt_buckets
+        )
+        # merge 2 yields one row per SAB of a CUI; the min-rank groupBy pins
+        # each (key, CODE, CODE_COLUMN)'s rank and collapses that fan-out
+        stack = (
+            stack.unionByName(stacked(umls_map, "UMLS_CODE", "UMLS_CODE", 2))
+            .unionByName(stacked(umls_map, "UMLS_CUI", "UMLS_CUI", 3))
+            .groupBy(*key, "CODE", "CODE_COLUMN")
+            .agg(F.min("src_rank").alias("src_rank"))
+        )
+        semtypes = ordered_concat_agg(
+            umls_map.select(*key, "UMLS_CUI", "UMLS_SEM_TYPE"),
+            key, ["UMLS_CUI", "UMLS_SEM_TYPE"], ["UMLS_CUI"],
+        ).select(F.lit("code").alias("kind"), *key, "UMLS_CUI", "UMLS_SEM_TYPE")
+    terms = dims.strings.select("CODE").distinct().withColumn("LINK_KEY", F.col("CODE"))
+    terms = stacked(terms, "CODE", "MENTION_LABEL", 0)
+    links = (
+        dbxref_link(stack, dims, key, "concept", umls=umls).withColumn("kind", F.lit("code"))
+        .unionByName(exact_string_link(terms, dims, key, "concept").withColumn("kind", F.lit("term")))
+        .select(*LINK_KEY_COLS, *LINK_VALUE_COLS)
+    )
+    links, fits = localize_dim_checked(links, max_rows)
+    if semtypes is not None:
+        semtypes, sty_fits = localize_dim_checked(semtypes, max_rows)
+        fits = fits and sty_fits
+    return LinkDim(links, semtypes, None if fits else salt_buckets, (mrconso, mrsty, vocab_map))

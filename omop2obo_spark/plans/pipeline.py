@@ -5,11 +5,11 @@
     (subj, pred, obj) triples.
 
 Stage mapping to the reference (SURVEY.md §3.2-3.3):
-  * code normalization + stacking  <-> clinical_concept_mapper steps 0-1
-    (clinical_concept_annotator.py:355-374)
-  * UMLS tier                      <-> umls_cui_annotator (:187-226)
-  * dbxref + ananke tier           <-> dbxref_mapper (:228-277)
-  * exact string tier              <-> exact_string_mapper (:279-328)
+  * code normalization + stacking, <-> clinical_concept_mapper steps 0-1
+    UMLS, dbxref + ananke and         (clinical_concept_annotator.py:
+    exact string tiers                 355-374, 187-328), run once over
+                                       the key domain as the link
+                                       dimension (operators/linking.py)
   * ancestor expansion             <-> ancestor-level annotation loop
     (:348-361), re-expressed as a join through the ancestor closure
   * TF-IDF tier                    <-> SimilarStringFinder (string_similarity.py)
@@ -18,14 +18,14 @@ Stage mapping to the reference (SURVEY.md §3.2-3.3):
 
 Scale notes: the fact table is touched by exactly one wide operation — the
 final per-mention groupBy in compile (keys are (conv_id, turn_idx,
-mention_id): high-cardinality, skew-free). Every dictionary join is
-broadcast. The TF-IDF tier only sees turns that produced no exact link.
+mention_id): high-cardinality, skew-free). Each mention is linked by one
+lookup into the link dimension: broadcast, or salted above the broadcast
+budget. The TF-IDF tier only sees turns that produced no exact link.
 """
 
 from __future__ import annotations
 
-import dataclasses
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,10 +48,13 @@ from omop2obo_spark.config import (
 )
 from omop2obo_spark.functions.normalize import normalize_source_codes, uri_ont_type
 from omop2obo_spark.functions.text import preprocess_tokens_expr
-from omop2obo_spark.operators.aggregate import ordered_concat_agg
 from omop2obo_spark.operators.compile import compile_mappings
-from omop2obo_spark.operators.linking import (
-    LexiconDims,
+from omop2obo_spark.operators.linking import LINK_VALUE_COLS, LexiconDims
+
+# Not called here (the link dimension runs them); kept importable because
+# the benchmark's tracer (perfbench/trace_layers.py) patches these names
+# in this module.
+from omop2obo_spark.operators.linking import (  # noqa: F401
     dbxref_link,
     exact_string_link,
     prepare_mrconso,
@@ -64,7 +67,12 @@ from omop2obo_spark.operators.similarity import (
     fit_tfidf_ont_vocab,
     similarity_scores,
 )
-from omop2obo_spark.plans.mention import detect_mentions
+from omop2obo_spark.plans.mention import (
+    ANCESTOR_CUE_PHRASE,
+    SYNONYM_CUE_PHRASE,
+    detect_mentions,
+    flag_phrase_context,
+)
 
 KEY_COLS = ["conv_id", "turn_idx", "mention_id"]
 
@@ -79,7 +87,7 @@ class PipelineResult:
     triples: DataFrame
     # executor caches still held by lazy plans (persist=False similarity
     # runs); call unpersist_caches() once consumers have executed
-    cached_inputs: list[DataFrame] = dataclasses.field(default_factory=list)
+    cached_inputs: list[DataFrame] = field(default_factory=list)
 
     def unpersist_caches(self) -> None:
         for df in self.cached_inputs:
@@ -87,30 +95,14 @@ class PipelineResult:
         self.cached_inputs = []
 
 
-def _stack_code_mentions(mentions: DataFrame, vocab_map: dict[str, str]) -> DataFrame:
-    """Code mentions → stacked (key, CODE, CODE_COLUMN, src_rank) rows.
-
-    Each code mention yields its normalized form (src_rank 0); pure-CUI
-    mentions additionally yield the bare upper-cased CUI (src_rank 1) so
-    the ananke bridge can key on it (the reference's stacked UMLS_CUI rows,
-    data_utils.py:44-81).
-    """
-    base = mentions.filter(F.col("kind") == "code").select(
-        *KEY_COLS, F.col("surface"), normalize_source_codes(F.col("surface"), vocab_map).alias("CODE")
-    )
-    norm = base.select(
-        *KEY_COLS, "CODE", F.lit("TURN_CODE").alias("CODE_COLUMN"), F.lit(0).alias("src_rank")
-    ).where(F.col("CODE").isNotNull())
-    cuis = (
-        base.filter(F.col("CODE").startswith("umls:c"))
-        .select(
-            *KEY_COLS,
-            F.upper(F.element_at(F.split(F.col("CODE"), ":"), -1)).alias("CODE"),
-            F.lit("UMLS_CUI").alias("CODE_COLUMN"),
-            F.lit(1).alias("src_rank"),
-        )
-    )
-    return norm.unionByName(cuis)
+def _ancestor_level() -> dict:
+    """A link row restated at ancestor level: LEVEL, and the level token of
+    EVIDENCE and CODE_COLUMN rewritten to ANCESTOR."""
+    return {
+        "EVIDENCE": F.regexp_replace("EVIDENCE", "^CONCEPT_", "ANCESTOR_"),
+        "CODE_COLUMN": F.regexp_replace("CODE_COLUMN", "^(TURN|MENTION|CONCEPT)_", "ANCESTOR_"),
+        "LEVEL": F.lit("ancestor"),
+    }
 
 
 def _expand_ancestors(exact_links: DataFrame, ancestors: DataFrame, labels: DataFrame) -> DataFrame:
@@ -134,11 +126,7 @@ def _expand_ancestors(exact_links: DataFrame, ancestors: DataFrame, labels: Data
         .withColumn("URI", F.col("ancestor_uri"))
         .withColumn("LABEL", F.coalesce(F.col("__anc_label"), F.col("LABEL")))
         .withColumn("ONT_TYPE", uri_ont_type(F.col("URI")))
-        .withColumn("EVIDENCE", F.regexp_replace("EVIDENCE", "^CONCEPT_", "ANCESTOR_"))
-        .withColumn(
-            "CODE_COLUMN", F.regexp_replace("CODE_COLUMN", "^(TURN|MENTION|CONCEPT)_", "ANCESTOR_")
-        )
-        .withColumn("LEVEL", F.lit("ancestor"))
+        .withColumns(_ancestor_level())
         # closure-derived rows are marked: their string-match surface maps
         # to the CHILD concept, so their label/synonym evidence can never
         # validate under the reference's dictionary check when the group
@@ -163,22 +151,16 @@ def run_pipeline(
     with_similarity: bool = True,
     persist: bool = True,
     dims: LexiconDims | None = None,
-    double_merge: bool = True,
     checkpoint_dir: str | None = None,
     assume_unique_turns: bool = True,
     context_channels: bool = False,
 ) -> PipelineResult:
     """Run the full transcripts→triples pipeline.
 
-    ``persist=True`` (default) cuts the plan at the stage boundaries that
-    are consumed by multiple downstream branches — mentions, exact links,
-    mappings — via ``localCheckpoint(eager=False)``: this both caches the
-    data AND truncates the logical plan. Truncation matters as much as
-    caching: Catalyst re-analyzes the full accumulated tree on every
-    DataFrame operation, and the compile/triple plans over the untruncated
-    linking tree cost tens of seconds of pure analyzer time. On a cluster
-    these same boundaries are where the checkpoint manifests write durable
-    parquet instead (plans/checkpoint.py), which truncates lineage too.
+    ``persist=True`` (default) checkpoints the stage boundaries that feed
+    several downstream branches — mentions, exact links, mappings — which
+    caches the data AND truncates the logical plan (Catalyst re-analyzes
+    the whole accumulated tree on every DataFrame operation).
     """
     dims = dims or LexiconDims.from_lexicon(lexicon, vocab_map)
     term_dim = dims.strings.select(F.col("CODE").alias("surface"))
@@ -209,124 +191,53 @@ def run_pipeline(
         # materialization converts it into parallel cluster work.
         mentions = _checkpoint(mentions, "mentions")
 
-    # ---- stage 2: entity linking ----------------------------------------
-    code_stack = _stack_code_mentions(mentions, vocab_map)
-    umls_prepped = prepare_mrconso(mrconso, vocab_map) if mrconso is not None else None
-    umls_strategy = "broadcast"
-    if umls_prepped is not None and persist:
-        # broadcast 3x (merge-1, merge-2, ananke) — localize once so those
-        # broadcast builds need no cluster job (see linking.localize_dim).
-        # A production-scale MRCONSO that exceeds the broadcast budget
-        # falls back to persist() + SALTED shuffle joins: the fact side's
-        # Zipf-skewed codes are spread over SALT_BUCKETS partitions.
-        from omop2obo_spark.operators.linking import localize_dim_checked
-
-        umls_prepped, fits = localize_dim_checked(umls_prepped, BROADCAST_DIM_MAX_ROWS)
-        if not fits:
-            umls_strategy = "salted"
-
-    semtypes = None
-    if umls_prepped is not None and mrsty is not None:
-        umls_map = umls_annotate(
-            code_stack.filter(F.col("CODE_COLUMN") == "TURN_CODE"),
-            umls_prepped, mrsty, KEY_COLS, "CODE", double_merge=double_merge,
-            dedup=False, strategy=umls_strategy, salt_buckets=SALT_BUCKETS,
-        )
-        # stack UMLS-derived codes back in (the reference's subsetter over
-        # [code, UMLS_CODE, UMLS_CUI])
-        umls_codes = umls_map.select(
-            *KEY_COLS, F.col("UMLS_CODE").alias("CODE"),
-            F.lit("UMLS_CODE").alias("CODE_COLUMN"), F.lit(2).alias("src_rank"),
-        ).where(F.col("CODE").isNotNull())
-        umls_cuis = umls_map.select(
-            *KEY_COLS, F.col("UMLS_CUI").alias("CODE"),
-            F.lit("UMLS_CUI").alias("CODE_COLUMN"), F.lit(3).alias("src_rank"),
-        )
-        # Deterministic min-rank dedup: the same (key, CODE, CODE_COLUMN)
-        # arrives from several stack sources (a pure-CUI mention at
-        # src_rank 1 AND one row per UMLS SAB at src_rank 3) — this groupBy
-        # both pins the winner deterministically AND collapses the per-SAB
-        # duplication before the dbxref/ananke joins multiply it.
-        code_stack = (
-            code_stack.unionByName(umls_codes).unionByName(umls_cuis)
-            .groupBy(*KEY_COLS, "CODE", "CODE_COLUMN")
-            .agg(F.min("src_rank").alias("src_rank"))
-        )
-        semtypes = ordered_concat_agg(
-            umls_map.select(*KEY_COLS, "UMLS_CUI", "UMLS_SEM_TYPE"),
-            KEY_COLS, ["UMLS_CUI", "UMLS_SEM_TYPE"], ["UMLS_CUI"],
-        )
-
-    # dedup=False throughout the hot path: every intermediate distinct here
-    # is a fact-scale SHUFFLE whose effect the compile stage reproduces for
-    # free (sorted first-occurrence concat + array_distinct + countDistinct
-    # are all invariant to duplicate link rows). The deduplicated artifact
-    # is still exposed on PipelineResult.exact_links below — lazily, so a
-    # triples-only run never pays for it.
-    dbx = dbxref_link(code_stack, dims, KEY_COLS, "concept", umls=umls_prepped, dedup=False)
-
-    term_mentions = mentions.filter(F.col("kind") == "term")
-    if context_channels:
-        # synonym channel: a mention introduced by "also known as" is an
-        # alternative clinical name — the transcript analog of the
-        # reference's CONCEPT_SYNONYM input column. Per-mention cue check
-        # (co-keyed join, no UDF); CODE_COLUMN drives both our evidence
-        # formatting (OMOP_<LVL>_SYNONYM) and the reference packer.
-        from omop2obo_spark.plans.mention import (
-            SYNONYM_CUE_PHRASE,
-            flag_phrase_context,
-        )
-
-        term_mentions = flag_phrase_context(
-            transcripts, term_mentions, SYNONYM_CUE_PHRASE, "__syn_ctx"
-        )
-        code_col = F.when(F.col("__syn_ctx"), F.lit("MENTION_SYNONYM")).otherwise(
-            F.lit("MENTION_LABEL")
-        )
-    else:
-        code_col = F.lit("MENTION_LABEL")
-    term_stack = term_mentions.select(
-        *KEY_COLS, F.col("surface").alias("CODE"),
-        code_col.alias("CODE_COLUMN"), F.lit(0).alias("src_rank"),
+    # ---- stage 2: entity linking: one lookup per mention ----------------
+    # every tier depends only on the mention's normalized code or lower-
+    # cased surface, so the tiers run once, in the link dimension, and the
+    # fact side joins it once (operators/linking.py build_link_dim)
+    link_dim = dims.link_dim(mrconso, mrsty, vocab_map, BROADCAST_DIM_MAX_ROWS, SALT_BUCKETS)
+    keys = mentions.select(
+        *KEY_COLS, "kind", "pos",
+        F.when(F.col("kind") == "code", normalize_source_codes(F.col("surface"), vocab_map))
+        .otherwise(F.lower(F.col("surface"))).alias("LINK_KEY"),
     )
-    strs = exact_string_link(term_stack, dims, KEY_COLS, "concept", dedup=False)
-
-    exact = dbx.unionByName(strs).withColumn("LEVEL", F.lit("concept"))
+    semtypes = None
+    if link_dim.semtypes is not None:
+        semtypes = link_dim.lookup(keys, link_dim.semtypes, KEY_COLS).select(
+            *KEY_COLS, "UMLS_CUI", "UMLS_SEM_TYPE"
+        )
+    relabel: dict = {}
+    if context_channels:
+        # synonym channel: a term mention introduced by "also known as" is
+        # an alternative clinical name — the transcript analog of the
+        # reference's CONCEPT_SYNONYM input column (co-keyed join, no UDF);
+        # CODE_COLUMN drives the OMOP_<LVL>_SYNONYM evidence format
+        keys = flag_phrase_context(transcripts, keys, SYNONYM_CUE_PHRASE, "__syn_ctx")
+        syn = (F.col("kind") == "term") & F.col("__syn_ctx")
+        relabel = {
+            "CODE_COLUMN": F.when(syn, F.lit("MENTION_SYNONYM")).otherwise(F.col("CODE_COLUMN")),
+            "EVIDENCE": F.when(
+                syn, F.regexp_replace("EVIDENCE", "^MENTION_LABEL:", "MENTION_SYNONYM:")
+            ).otherwise(F.col("EVIDENCE")),
+        }
+    exact = link_dim.lookup(keys, link_dim.links, KEY_COLS).select(
+        *KEY_COLS, *[relabel.get(c, F.col(c)).alias(c) for c in LINK_VALUE_COLS]
+    ).withColumn("LEVEL", F.lit("concept"))
     if context_channels:
         # ancestor channel: a turn containing the family-history cue scopes
-        # ALL its mentions to the hereditary context — the transcript analog
-        # of the reference's clinical ANCESTOR_* input columns, whose codes/
-        # strings run through the same linking tiers AT ancestor level (and,
-        # exactly like the reference's ancestor channel, are NOT further
-        # closure-expanded). Turn-scoped (an FH section governs its clause),
-        # mirroring sectioned clinical notes.
-        from omop2obo_spark.plans.mention import ANCESTOR_CUE_PHRASE
-
+        # ALL its mentions to ancestor level — the transcript analog of the
+        # reference's clinical ANCESTOR_* input columns, which run through
+        # the same tiers at ancestor level and are NOT closure-expanded
         fh = transcripts.select(
             "conv_id", "turn_idx",
             F.lower(F.col("text")).contains(ANCESTOR_CUE_PHRASE).alias("__fh"),
         )
-        exact = exact.join(fh, on=["conv_id", "turn_idx"], how="left")
         is_fh = F.coalesce(F.col("__fh"), F.lit(False))
         exact = (
-            exact.withColumn(
-                "LEVEL", F.when(is_fh, F.lit("ancestor")).otherwise(F.col("LEVEL"))
-            )
-            .withColumn(
-                "EVIDENCE",
-                F.when(
-                    is_fh, F.regexp_replace("EVIDENCE", "^CONCEPT_", "ANCESTOR_")
-                ).otherwise(F.col("EVIDENCE")),
-            )
-            .withColumn(
-                "CODE_COLUMN",
-                F.when(
-                    is_fh,
-                    F.regexp_replace(
-                        "CODE_COLUMN", "^(TURN|MENTION|CONCEPT)_", "ANCESTOR_"
-                    ),
-                ).otherwise(F.col("CODE_COLUMN")),
-            )
+            exact.join(fh, on=["conv_id", "turn_idx"], how="left")
+            .withColumns({
+                c: F.when(is_fh, v).otherwise(F.col(c)) for c, v in _ancestor_level().items()
+            })
             .drop("__fh")
         )
     # direct links (concept-level or ancestor-CHANNEL): surface maps to the

@@ -67,37 +67,17 @@ class GraphSink:
         batch's partitions" holds even for empty ones. (Iceberg spelling:
         overwritePartitions on a frame that includes the empty partitions.)
 
-        ANY scheme-qualified root (``hdfs://``, ``s3a://``, and also
-        ``file://``) is deleted through the Hadoop FileSystem API so the
-        guarantee holds everywhere Spark can write — ``os.path.isdir`` on a
-        ``file:///…/part_id=N`` string is always False, so the shutil branch
-        would silently no-op and resurrect the exact orphan rows this method
-        exists to kill. Only scheme-less local paths keep the cheap
-        ``shutil`` path (no JVM round-trip).
+        Every root is deleted through the Hadoop FileSystem API, which
+        resolves it exactly like the writer does: a scheme-qualified root
+        (``hdfs://``, ``s3a://``, ``file://``) by its scheme, a scheme-less
+        one against ``fs.defaultFS`` — HDFS on a cluster. A driver-local
+        ``shutil`` delete would miss the data the writer put there and
+        resurrect the exact orphan rows this method exists to kill.
         """
-        if "://" in self.triples_dir:
-            spark = spark or SparkSession.getActiveSession()
-            if spark is None:
-                raise RuntimeError(
-                    f"clear_partitions on remote root {self.triples_dir!r} "
-                    "needs an active SparkSession for the Hadoop FileSystem "
-                    "API; pass spark= explicitly"
-                )
-            jvm = spark._jvm
-            hconf = spark._jsc.hadoopConfiguration()
-            for p in part_ids:
-                jpath = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.triples_dir}/part_id={p}")
-                fs = jpath.getFileSystem(hconf)
-                if fs.exists(jpath):
-                    fs.delete(jpath, True)
-            return
-        import shutil
-
         for p in part_ids:
-            d = os.path.join(self.triples_dir, f"part_id={p}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+            jpath, fs, _ = self._fs(spark, f"{self.triples_dir}/part_id={p}")
+            if fs.exists(jpath):
+                fs.delete(jpath, True)
 
     def read_triples(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.triples_dir)
@@ -115,8 +95,8 @@ class GraphSink:
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError(
-                f"manifest I/O on remote root {self.root!r} needs an active "
-                "SparkSession for the Hadoop FileSystem API; pass spark="
+                f"Hadoop FileSystem I/O on root {self.root!r} needs an active "
+                "SparkSession; pass spark="
             )
         jpath = spark._jvm.org.apache.hadoop.fs.Path(path_str)
         return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), spark

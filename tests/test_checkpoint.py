@@ -197,6 +197,64 @@ def test_clear_partitions_file_scheme_uri(spark, tmp_path):
     assert leftover == [], leftover
 
 
+def test_clear_partitions_scheme_less_root_follows_default_fs(spark, tmp_path):
+    """A scheme-less root resolves against ``fs.defaultFS`` (HDFS on a
+    cluster), so clear_partitions must delete through the Hadoop
+    FileSystem API, not on the driver's local disk. Here the default FS
+    is a viewfs whose mount maps ``<tmp>/graph`` onto ``<tmp>/mnt``: the
+    writer's partitions land under the mount target, and a local delete
+    of ``<tmp>/graph/...`` would leave them all in place."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    mount = f"fs.viewfs.mounttable.kg.link.{tmp_path}/graph"
+    old_default = hconf.get("fs.defaultFS")
+    hconf.set(mount, f"file://{tmp_path}/mnt")
+    hconf.set("fs.defaultFS", "viewfs://kg/")
+    try:
+        sink = GraphSink(str(tmp_path / "graph" / "sink"), n_buckets=2)
+        sink.write_partitions(sink.with_part_id(_builder(spark)(FX.transcripts_df(spark, 10, 2))))
+        target = tmp_path / "mnt" / "sink" / "triples"
+        assert sorted(d for d in os.listdir(target) if d.startswith("part_id=")), \
+            "the writer did not go through the viewfs mount"
+
+        sink.clear_partitions([0, 1], spark=spark)
+        leftover = [d for d in os.listdir(target) if d.startswith("part_id=")]
+        assert leftover == [], leftover
+    finally:
+        hconf.set("fs.defaultFS", old_default)
+        hconf.unset(mount)
+
+
+def test_partitioned_run_builds_link_dimension_once(spark, tmp_path, monkeypatch):
+    """The link dimension depends only on the lexicon, MRCONSO, MRSTY and
+    vocab map, so a partitioned run whose batches share them builds it
+    once, not once per batch."""
+    from omop2obo_spark.operators import linking
+
+    calls = []
+    real = linking.build_link_dim
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(linking, "build_link_dim", spy)
+    lex, vm = FX.lexicon_df(spark), vocab_map_dict()
+    dims = linking.LexiconDims.from_lexicon(lex, vm)
+    mrconso, mrsty = FX.mrconso_df(spark), FX.mrsty_df(spark)
+
+    def build(transcripts):
+        return run_pipeline(
+            spark, transcripts, lex, vm, mrconso=mrconso, mrsty=mrsty,
+            with_similarity=False, persist=False, dims=dims,
+        ).triples
+
+    sink = GraphSink(str(tmp_path / "g"), n_buckets=4)
+    summary = run_partitioned(spark, FX.transcripts_df(spark, 20, 3), build, sink,
+                              batch_partitions=1)
+    assert len(summary["processed"]) == 4
+    assert len(calls) == 1
+
+
 def test_foreign_partition_rows_fail_loudly(spark, tmp_path):
     """A build that rewrites the bucket key would dynamic-overwrite a
     FOREIGN partition (clobbered later by that partition's own batch) —

@@ -34,6 +34,44 @@ def test_kg_pipeline_joins_all_broadcast(spark):
     assert "LocalTableScan" in plan
 
 
+def test_link_dimension_above_broadcast_budget_joins_salted(spark, monkeypatch):
+    """A link dimension above BROADCAST_DIM_MAX_ROWS is joined through
+    joins.salted_join (a shuffle on the lookup key plus ``__salt``), with
+    the same triples as the broadcast lookup."""
+    from omop2obo_spark.plans import pipeline
+
+    tr = transcripts_df(spark, n_convs=20, turns_per_conv=5)
+
+    def run():
+        return run_pipeline(
+            spark, tr, FX.lexicon_df(spark), vocab_map_dict(),
+            mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
+            ancestors=FX.ancestors_df(spark), with_similarity=False, persist=False,
+        ).triples
+
+    def triple_set(df):
+        return {tuple(r) for r in df.select("subj", "pred", "obj").collect()}
+
+    broadcast = triple_set(run())
+    monkeypatch.setattr(pipeline, "BROADCAST_DIM_MAX_ROWS", 1)
+    # the persisted dimension is tiny: keep the planner from broadcasting it
+    # anyway, as it could not at the size that triggers the fallback
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        salted = run()
+        plan = _plan(salted)
+        # a shuffle join keyed on the link key and the salt
+        assert any(
+            ("SortMergeJoin" in line or "ShuffledHashJoin" in line)
+            and "LINK_KEY" in line and "__salt" in line
+            for line in plan.splitlines()
+        ), plan
+        assert triple_set(salted) == broadcast
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_context_channel_pipeline_plan_stays_scale_safe(spark):
     """The r5 context channels must not change the pipeline's scale shape:
     with ``context_channels=True`` (synonym-cue flagging + FH relabel +

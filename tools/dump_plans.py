@@ -18,8 +18,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # query name → what a reviewer should notice in the plan
 NOTES = {
     "q_kg_triples": (
-        "Every dictionary join is BroadcastHashJoin over a LocalTableScan "
-        "(no job to build the broadcast side, no SortMergeJoin anywhere); "
+        "Each mention is linked by ONE BroadcastHashJoin into the link "
+        "dimension (every linking tier, built once, as a LocalTableScan: "
+        "no job to build the broadcast side, no SortMergeJoin anywhere); "
         "the only wide exchanges are the per-mention compile groupBy and "
         "the final triple distinct — both keyed on high-cardinality, "
         "skew-free ids."

@@ -26,8 +26,12 @@ invariant to that quirk, which is exactly why the north rule is stated
 over triples. The tool reports triple P/R plus per-cell agreement for the
 URI/MAPPING columns (evidence columns reported separately).
 
-Usage: python tools/pr_vs_reference.py [sf_dir]   (default sf0.01)
-Prints one JSON line.
+The Spark side (the pipeline runs, the turn-level compile, the triple
+extraction) lives in ``tools/triple_sets.py``, which also pins the sets as
+goldens; this tool adds only the reference side.
+
+Usage: python tools/pr_vs_reference.py [--rich] [sf_dir | --fixture N_CONCEPTS]
+(default sf0.01). Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -38,10 +42,11 @@ import os
 import sys
 import types
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import triple_sets as TS  # noqa: E402  (puts the repo root on sys.path)
 
 REF_DATA_UTILS = "/root/reference/omop2obo/utils/data_utils.py"
-ONTS = ["HP", "MONDO"]
+ONTS = TS.ONTS
 
 
 def load_reference_data_utils():
@@ -177,70 +182,15 @@ def pack_reference_input(links_pdf, sims_pdf):
     return pd.DataFrame(rows)
 
 
-def norm(v):
-    import pandas as pd
-
-    if v is None or (isinstance(v, float) and pd.isna(v)) or v == "":
-        return None
-    return v
-
-
-def triples(frame):
-    """(key, pred, obj) set from a wide frame — same extraction as
-    tests/test_reference_differential.py::test_triple_pr_vs_reference_code."""
-    out = set()
-    for cid in frame.index:
-        for ont in ONTS:
-            for blk, pred in (("AGGREGATED", "hasExactMapping"),
-                              ("SIMILARITY", "hasSimilarityMapping")):
-                uris = norm(frame.at[cid, f"{blk}_{ont}_URI"])
-                cat = norm(frame.at[cid, f"{blk}_{ont}_MAPPING"])
-                if uris:
-                    for u in uris.split(" | "):
-                        out.add((cid, pred, u.split("/")[-1]))
-                if cat:
-                    out.add((cid, "hasMappingCategory:" + blk + ":" + ont, cat))
-    return out
-
-
 def main(sf_dir: str, rich: bool = False) -> dict:
     from pyspark.sql import functions as F
 
     from omop2obo_spark import fixtures as FX
-    from omop2obo_spark.operators.compile import wide_mapping_layout
     from omop2obo_spark.session import get_spark
 
     ref = load_reference_data_utils()
     spark = get_spark(master="local[8]", shuffle_partitions=16)
-    import __spark_entry__ as entry
-
-    if rich:
-        # rich corpus mode: two-label turns (multi-concept keys) + the
-        # cross-ontology ancestor overlay, so ALL FOUR AGGREGATED category
-        # branches (Exact/Constructor x Concept/Ancestor) fire end-to-end
-        # through mention detection (round-5 verdict task 4). The flagship
-        # text/oracle is untouched — this path builds its own pipeline run.
-        from omop2obo_spark.fixtures import lexicon_data as LD
-        from omop2obo_spark.fixtures.generators import (
-            transcripts_from_documents,
-            vocab_map_dict,
-        )
-        from omop2obo_spark.plans.pipeline import run_pipeline
-
-        transcripts = transcripts_from_documents(spark, sf_dir, rich_mentions=True)
-        ancestors = FX.ancestors_df(spark).unionByName(
-            spark.createDataFrame(
-                LD.cross_ontology_overlay(), "uri string, ancestor_uri string"
-            )
-        )
-        res = run_pipeline(
-            spark, transcripts, FX.lexicon_df(spark), vocab_map_dict(),
-            mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
-            ancestors=ancestors, with_similarity=True, dims=FX.cached_dims(spark),
-            context_channels=True,
-        )
-    else:
-        res = entry._pipeline_result(spark, sf_dir, with_similarity=True)
+    res = TS.corpus_result(spark, sf_dir, rich=rich)
     links_pdf = res.exact_links.toPandas()
     sim = res.sim_matches
     lab_dim = FX.lexicon_df(spark).filter(F.col("kind") == "label").select(
@@ -264,22 +214,9 @@ def main(sf_dir: str, rich: bool = False) -> dict:
         [(k.rsplit(":", 1)[0], int(k.rsplit(":", 1)[1])) for k in keys["CONCEPT_ID"]],
         "conv_id string, turn_idx int",
     )
-    # compile at TURN granularity for the comparison: the reference's
-    # CONCEPT_ID is the turn, so a multi-mention turn aggregates ALL its
-    # links/sims into one evidence set (compile_mappings is generic over
-    # key_cols — the pipeline's own mention-level compile serves the triple
-    # graph, this turn-level pass serves reference parity)
-    from omop2obo_spark.operators.compile import compile_mappings
+    ours = TS.turn_wide(spark, res, base=base)
 
-    mappings_turn = compile_mappings(
-        res.exact_links, res.sim_matches, FX.cached_dims(spark).labels,
-        ["conv_id", "turn_idx"], 0.25,
-    )
-    ours = wide_mapping_layout(mappings_turn, ["conv_id", "turn_idx"], ONTS, base=base).toPandas()
-    ours["CONCEPT_ID"] = ours["conv_id"] + ":" + ours["turn_idx"].astype(str)
-    ours = ours.set_index("CONCEPT_ID")
-
-    ref_t, our_t = triples(ref_out), triples(ours)
+    ref_t, our_t = TS.wide_triples(ref_out), TS.wide_triples(ours)
     tp = len(ref_t & our_t)
     precision = tp / len(our_t) if our_t else 1.0
     recall = tp / len(ref_t) if ref_t else 1.0
@@ -295,7 +232,7 @@ def main(sf_dir: str, rich: bool = False) -> dict:
         for cid in ref_out.index:
             for c in cols:
                 total += 1
-                if norm(ref_out.at[cid, c]) == norm(ours.at[cid, c]):
+                if TS.norm(ref_out.at[cid, c]) == TS.norm(ours.at[cid, c]):
                     same += 1
         return same / total if total else 1.0
 
@@ -323,7 +260,7 @@ def main(sf_dir: str, rich: bool = False) -> dict:
     return out
 
 
-def main_fixture(n_concepts: int, seed: int = 20260821) -> dict:
+def main_fixture(n_concepts: int, seed: int = TS.FIXTURE_SEED) -> dict:
     """Scaled randomized-fixture P/R: the differential suite's generator
     (all six mapping-category branches, dbxref/label/synonym/ancestor/
     similarity scenarios) grown from 48 to ``n_concepts`` concepts, both
@@ -331,20 +268,9 @@ def main_fixture(n_concepts: int, seed: int = 20260821) -> dict:
     the synthetic transcripts corpus is category-degenerate (every linked
     turn maps 1 URI in 1 ontology), while this exercises the full branch
     matrix at scale."""
-    import random
-
-    spec = importlib.util.spec_from_file_location(
-        "ref_diff", os.path.join(os.path.dirname(__file__), "..", "tests",
-                                 "test_reference_differential.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
     from omop2obo_spark.session import get_spark
 
-    rng = random.Random(seed)
-    lex = mod._make_lexicon(rng)
-    concepts, links, sims = mod._make_concepts(rng, lex, n=n_concepts)
+    mod, lex, concepts, links, sims = TS.fixture_inputs(n_concepts, seed)
     ref_in = mod._reference_wide_frame(concepts, links, sims)
     ref_out = mod.ref.aggregates_mapping_results(
         ref_in.copy(), [o.lower() for o in mod.ONTS], mod._ont_data(lex), {}, 0.25
@@ -353,9 +279,7 @@ def main_fixture(n_concepts: int, seed: int = 20260821) -> dict:
     spark = get_spark(master="local[8]", shuffle_partitions=16)
     ours = mod._spark_wide(spark, concepts, links, sims).set_index("CONCEPT_ID")
 
-    global ONTS
-    ONTS = mod.ONTS
-    ref_t, our_t = triples(ref_out), triples(ours)
+    ref_t, our_t = TS.wide_triples(ref_out), TS.wide_triples(ours)
     tp = len(ref_t & our_t)
     cats = {}
     for _, p, o in ref_t:
