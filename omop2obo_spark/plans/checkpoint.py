@@ -9,13 +9,16 @@ is its skip-if-exists caching of processed ontologies
 data partitions.
 
 Protocol per partition batch:
-    1. filter the fact table to the batch's part_ids (one predicate —
-       partition pruning on a pre-bucketed Iceberg table)
-    2. run the pipeline on the subset
-    3. dynamic-partition-overwrite the triple output for those part_ids
-    4. append 'done' manifest records (data commit strictly before state
-       commit, so a crash between 3 and 4 re-runs the partition — safe,
-       because 3 is an overwrite, not an append)
+    1. record 'pending' for each of the batch's part_ids
+    2. filter the fact table to the batch's part_ids (one predicate —
+       partition pruning on a pre-bucketed Iceberg table) and run the
+       pipeline on the subset; a row bucketed outside the batch fails the
+       write below
+    3. clear the batch's partitions, then dynamic-partition-overwrite the
+       triple output into them
+    4. count the written rows per part_id and record 'done' (data commit
+       strictly before state commit, so a crash between 3 and 4 re-runs
+       the partition — safe, because 3 is an overwrite, not an append)
 """
 
 from __future__ import annotations
@@ -24,10 +27,13 @@ import time
 import uuid
 from collections.abc import Callable
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omop2obo_spark.sources.writers import GraphSink
+
+_FOREIGN = "outside the current batch"
 
 
 def run_partitioned(
@@ -67,47 +73,38 @@ def run_partitioned(
         for p in part_ids:
             sink.record(run_id, p, "pending")
         triples = sink.with_part_id(build_triples(subset))
-        # persist so the write below reuses the same data the pre-write
-        # partition probe saw (no recompute between probe and write)
-        triples = triples.persist()
-        nonempty = {r["part_id"] for r in triples.select("part_id").distinct().collect()}
         # a build whose output conv_ids hash outside this batch would be
         # dynamic-overwritten into a FOREIGN partition and clobbered when
-        # that partition's own batch runs — fail loudly instead (the
-        # standard pipeline preserves conv_id, so this only fires for a
-        # build_triples that rewrites or nulls the bucket key)
-        foreign = nonempty - set(part_ids)
-        if foreign:
-            triples.unpersist()
-            raise ValueError(
-                f"build_triples emitted rows for partitions {sorted(foreign)} "
-                f"outside the current batch {part_ids}; bucket key must be "
-                "preserved for per-partition overwrite resume to be sound"
-            )
+        # that partition's own batch runs — the write fails on the first
+        # such row instead (the standard pipeline preserves conv_id, so
+        # this only fires for a build_triples that rewrites or nulls the
+        # bucket key)
+        in_batch = F.col("part_id").isin(part_ids)
+        triples = triples.withColumn("part_id", F.when(in_batch, F.col("part_id")).otherwise(
+            F.raise_error(F.concat(
+                F.lit("build_triples emitted rows for partition "),
+                F.col("part_id").cast("string"),
+                F.lit(f" {_FOREIGN} {part_ids}; bucket key must be preserved "
+                      "for per-partition overwrite resume to be sound")))))
         # dynamic overwrite only rewrites partitions PRESENT in the frame:
-        # batch partitions that produced zero rows must be cleared
-        # explicitly, or a previous crash-window attempt's files survive
-        # (and would be mis-attributed to this run by the count below)
-        sink.clear_partitions([p for p in part_ids if p not in nonempty])
-        if nonempty:
+        # clearing all of the batch's first drops whatever a previous
+        # crash-window attempt left in one that now yields no rows
+        sink.clear_partitions(part_ids)
+        try:
             sink.write_partitions(triples)
-        triples.unpersist()
+        except PySparkException as e:
+            msg = (e.getMessageParameters() or {}).get("errorMessage", "")
+            if e.getCondition() != "USER_RAISED_EXCEPTION" or _FOREIGN not in msg:
+                raise
+            raise ValueError(msg) from e
         # manifest counts come from the files actually written (partition-
-        # pruned scan, parquet footer counts): if the cache was partially
-        # evicted the write recomputed the plan, and a pre-write count
-        # would audit data that never hit disk. Skipped for an all-empty
-        # batch: nothing was written, and a fresh sink has no dataset to
-        # read (schema inference on zero files fails).
-        written = (
-            {
-                r["part_id"]: r["n"]
-                for r in sink.read_triples(spark)
-                .filter(F.col("part_id").isin(part_ids))
-                .groupBy("part_id").agg(F.count("*").alias("n")).collect()
-            }
-            if nonempty
-            else {}
-        )
+        # pruned scan, parquet footer counts); the sink's declared schema
+        # reads an all-empty batch back as 0 rows
+        written = {
+            r["part_id"]: r["n"]
+            for r in sink.read_triples(spark).filter(in_batch)
+            .groupBy("part_id").agg(F.count("*").alias("n")).collect()
+        }
         n = sum(written.values())
         # the batch ran as one job: split its wall across the partitions
         # so the shares sum to it exactly (manifest_audit sums wall_ms)

@@ -7,35 +7,58 @@ partition-overwrite mode, which rewrites only the partitions present in the
 written DataFrame — the idempotency primitive the checkpoint/resume layer
 needs (SURVEY.md §4.2 "Checkpoint/resume + lineage").
 
-Layout:
+Layout (the same for every root):
     <root>/triples/part_id=<k>/...parquet
-    <root>/manifest.jsonl      — one record per (run_id, part_id) attempt
-                                 (local roots; append)
-    <root>/manifest/<ts>-<uuid>.json — same records, one immutable file
-                                 each (scheme-qualified roots — object
-                                 stores have no append)
+    <root>/manifest/<ts>-<uuid>.json — one immutable file per
+                                       (run_id, part_id) attempt record
+
+Every path goes through the Hadoop FileSystem API, which resolves it
+exactly like Spark's writer does: a scheme-qualified root (``hdfs://``,
+``s3a://``, ``file://``) by its scheme, a scheme-less one against
+``fs.defaultFS`` — HDFS on a cluster. The sink touches no driver-local
+disk, so a driver restarted on another node finds the same manifest.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def hadoop_path(path: str, spark: SparkSession | None = None):
+    """``(Path, FileSystem)`` for ``path``, resolved by the session's
+    Hadoop configuration exactly as Spark's readers and writers resolve it."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError(f"Hadoop FileSystem I/O on {path!r} needs an active "
+                           "SparkSession; pass spark=")
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 class GraphSink:
-    """Bucketed triple sink + JSONL partition manifest."""
+    """Bucketed triple sink + per-record partition manifest."""
+
+    #: the columns ``build_triples`` emits, plus the bucket id; written and
+    #: read back with these types, so an all-empty batch reads as 0 rows
+    SCHEMA = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("subj", T.StringType()),
+        T.StructField("pred", T.StringType()),
+        T.StructField("obj", T.StringType()),
+        T.StructField("part_id", T.IntegerType()),
+    ])
 
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
         self.n_buckets = n_buckets
-        self.triples_dir = os.path.join(root, "triples")
-        self.manifest_path = os.path.join(root, "manifest.jsonl")
-        if "://" not in root:  # remote roots are created by the FS on write
-            os.makedirs(root, exist_ok=True)
+        self.triples_dir = f"{root}/triples"
 
     # -- partitioning -------------------------------------------------------
     def with_part_id(self, df: DataFrame, bucket_col: str = "conv_id") -> DataFrame:
@@ -49,7 +72,8 @@ class GraphSink:
     def write_partitions(self, triples: DataFrame) -> None:
         """Idempotently (re)write exactly the part_ids present in ``triples``."""
         (
-            triples.repartition("part_id")
+            triples.select(*self.SCHEMA.fieldNames())
+            .repartition("part_id")
             .sortWithinPartitions("conv_id", "turn_idx", "subj", "pred")
             .write.partitionBy("part_id")
             .option("partitionOverwriteMode", "dynamic")
@@ -59,90 +83,54 @@ class GraphSink:
 
     def clear_partitions(self, part_ids: list[int],
                          spark: SparkSession | None = None) -> None:
-        """Remove the on-disk data for ``part_ids``. Dynamic partition
-        overwrite only rewrites partitions PRESENT in the written frame, so
-        a batch partition that legitimately produced zero rows keeps
-        whatever a previous crashed attempt left behind — the resume layer
-        clears those explicitly so "this batch's output replaces all of the
+        """Remove the data for ``part_ids``. Dynamic partition overwrite
+        only rewrites partitions PRESENT in the written frame, so a batch
+        partition that legitimately produced zero rows keeps whatever a
+        previous crashed attempt left behind — the resume layer clears
+        those explicitly so "this batch's output replaces all of the
         batch's partitions" holds even for empty ones. (Iceberg spelling:
         overwritePartitions on a frame that includes the empty partitions.)
-
-        Every root is deleted through the Hadoop FileSystem API, which
-        resolves it exactly like the writer does: a scheme-qualified root
-        (``hdfs://``, ``s3a://``, ``file://``) by its scheme, a scheme-less
-        one against ``fs.defaultFS`` — HDFS on a cluster. A driver-local
-        ``shutil`` delete would miss the data the writer put there and
-        resurrect the exact orphan rows this method exists to kill.
         """
         for p in part_ids:
-            jpath, fs, _ = self._fs(spark, f"{self.triples_dir}/part_id={p}")
-            if fs.exists(jpath):
-                fs.delete(jpath, True)
+            jpath, fs = hadoop_path(f"{self.triples_dir}/part_id={p}", spark)
+            fs.delete(jpath, True)  # False when absent
 
     def read_triples(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.triples_dir)
+        return spark.read.schema(self.SCHEMA).parquet(self.triples_dir)
 
     # -- manifest -----------------------------------------------------------
-    # Local roots append to one JSONL file. Scheme-qualified roots (hdfs://,
-    # s3a://, file://) cannot rely on POSIX append — object stores don't
-    # have it — so each record is its own immutable file under
-    # <root>/manifest/, named by a zero-padded nanosecond timestamp so a
-    # lexicographic listing replays append order. Without this, record()
-    # on a remote root would raise (or worse, write to a bogus local path
-    # named "s3a:/...") and completed_partitions() would silently return
-    # empty — re-running every partition on every resume.
-    def _fs(self, spark: SparkSession | None, path_str: str):
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                f"Hadoop FileSystem I/O on root {self.root!r} needs an active "
-                "SparkSession; pass spark="
-            )
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path_str)
-        return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), spark
-
+    # Each record is its own immutable file under <root>/manifest/ (object
+    # stores have no append), named by a zero-padded nanosecond timestamp
+    # so a lexicographic listing replays append order.
     def record(self, run_id: str, part_id: int, status: str,
                spark: SparkSession | None = None, **metrics) -> None:
         rec = {"run_id": run_id, "part_id": part_id, "status": status,
                "ts": time.time(), **metrics}
-        if "://" in self.root:
-            import uuid
-
-            name = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.json"
-            jpath, fs, _ = self._fs(spark, f"{self.root}/manifest/{name}")
-            out = fs.create(jpath, True)
-            try:
-                out.write(bytearray(json.dumps(rec).encode("utf-8")))
-            finally:
-                out.close()
-            return
-        with open(self.manifest_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        name = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.json"
+        jpath, fs = hadoop_path(f"{self.root}/manifest/{name}", spark)
+        out = fs.create(jpath, True)
+        try:
+            out.write(bytearray(json.dumps(rec).encode("utf-8")))
+        finally:
+            out.close()
 
     def manifest(self, spark: SparkSession | None = None) -> list[dict]:
-        if "://" in self.root:
-            jdir, fs, spark = self._fs(spark, f"{self.root}/manifest")
-            if not fs.exists(jdir):
-                return []
-            names = sorted(
-                st.getPath().getName() for st in fs.listStatus(jdir)
-                if st.isFile() and st.getPath().getName().endswith(".json")
-            )
-            recs = []
-            io_utils = spark._jvm.org.apache.commons.io.IOUtils
-            for name in names:
-                jp = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{self.root}/manifest/{name}")
-                stream = fs.open(jp)
-                try:
-                    recs.append(json.loads(bytes(io_utils.toByteArray(stream))))
-                finally:
-                    stream.close()
-            return recs
-        if not os.path.exists(self.manifest_path):
-            return []
-        with open(self.manifest_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        jglob, fs = hadoop_path(f"{self.root}/manifest/*.json", spark)
+        recs = []
+        for st in sorted(fs.globStatus(jglob) or [], key=lambda s: s.getPath().getName()):
+            stream = fs.open(st.getPath())
+            try:
+                data = bytes(stream.readAllBytes())
+            finally:
+                stream.close()
+            # a driver killed inside record() leaves a torn file: the last
+            # record of a dead attempt, so reading it as absent only re-runs
+            # that partition
+            try:
+                recs.append(json.loads(data))
+            except ValueError:
+                continue
+        return recs
 
     def completed_partitions(self, spark: SparkSession | None = None) -> set[int]:
         """Partitions whose *latest* manifest record is 'done'."""
@@ -177,17 +165,15 @@ def save_bucketed_tables(
     """
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     t_triples, t_tr = f"{db}.triples_bucketed", f"{db}.transcripts_bucketed"
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
     for name in (t_triples, t_tr):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         # a crashed previous writer can leave an orphan location the
         # (session-scoped) catalog no longer knows about — managed-table
-        # creation refuses to reuse it, so clear it explicitly
-        orphan = os.path.join(wh, f"{db}.db", name.split(".", 1)[1])
-        if wh and os.path.isdir(orphan):
-            import shutil
-
-            shutil.rmtree(orphan)
+        # creation refuses to reuse it, so clear it explicitly (through the
+        # Hadoop FS API: the warehouse may be on HDFS or S3)
+        jpath, fs = hadoop_path(
+            f"{spark.catalog.getDatabase(db).locationUri}/{name.split('.', 1)[1]}", spark)
+        fs.delete(jpath, True)
     (
         triples.write.bucketBy(n_buckets, "conv_id")
         .sortBy("conv_id", "turn_idx")
@@ -215,7 +201,7 @@ def manifest_audit(spark: SparkSession, sink: "GraphSink") -> DataFrame:
       * ``crash_window`` — latest record is 'pending': a writer died
         between data commit and state commit; the partition will be
         re-run on resume (safe — the write is an overwrite) but the
-        audit SURFACES it instead of leaving it buried in the JSONL
+        audit SURFACES it instead of leaving it buried in the manifest
 
     The manifest is bounded by n_buckets x attempts (operational
     metadata, not data), so materializing it through the driver — which

@@ -75,8 +75,8 @@ def test_rerun_partition_is_idempotent_overwrite(spark, tmp_path):
     run_partitioned(spark, t, build, sink)
     once = sorted((r.subj, r.pred, r.obj) for r in sink.read_triples(spark).collect())
     # force a full re-run by clearing the manifest (data files stay!)
-    import os
-    os.remove(sink.manifest_path)
+    import shutil
+    shutil.rmtree(tmp_path / "o2" / "manifest")
     run_partitioned(spark, t, build, sink)
     twice = sorted((r.subj, r.pred, r.obj) for r in sink.read_triples(spark).collect())
     assert once == twice  # overwrite, not append — no duplicates
@@ -120,6 +120,37 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS kg_test.transcripts_bucketed")
 
 
+def test_bucketed_tables_save_over_orphan_location(spark):
+    """A crashed writer can leave files at a managed table's location that
+    the catalog no longer knows about; the save clears them instead of
+    failing on the non-empty location."""
+    from urllib.parse import urlparse
+
+    from omop2obo_spark.sources.writers import save_bucketed_tables
+
+    db = "kg_orphan"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    spark.sql(f"DROP TABLE IF EXISTS {db}.triples_bucketed")
+    orphan = os.path.join(urlparse(spark.catalog.getDatabase(db).locationUri).path,
+                          "triples_bucketed")
+    os.makedirs(orphan, exist_ok=True)
+    with open(os.path.join(orphan, "part-stray.parquet"), "w") as f:
+        f.write("left by a crashed writer")
+    triples = spark.createDataFrame(
+        [("c0", 0, "s", "p", "o")],
+        "conv_id string, turn_idx int, subj string, pred string, obj string",
+    )
+    transcripts = spark.createDataFrame(
+        [("c0", 0, "user", "text")], "conv_id string, turn_idx int, role string, text string")
+    try:
+        t_triples, _ = save_bucketed_tables(spark, triples, transcripts, db=db, n_buckets=2)
+        assert spark.table(t_triples).count() == 1
+        assert not os.path.exists(os.path.join(orphan, "part-stray.parquet"))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {db}.triples_bucketed")
+        spark.sql(f"DROP TABLE IF EXISTS {db}.transcripts_bucketed")
+
+
 def test_batch_partitions_zero_rejected(spark, tmp_path):
     t = FX.transcripts_df(spark, 5, 2)
     sink = GraphSink(str(tmp_path / "g"), n_buckets=4)
@@ -159,9 +190,9 @@ def test_stale_crash_window_files_cleared_on_rerun(spark, tmp_path):
     # manifest (data files stay, nothing recorded 'done')
     run_partitioned(spark, t, build, sink)
     assert sink.read_triples(spark).count() > 0
-    import os
+    import shutil
 
-    os.remove(sink.manifest_path)
+    shutil.rmtree(tmp_path / "stale" / "manifest")
 
     # re-run with a build that now produces NOTHING: all partitions must
     # end up empty on disk and every manifest count must be 0
@@ -197,31 +228,41 @@ def test_clear_partitions_file_scheme_uri(spark, tmp_path):
     assert leftover == [], leftover
 
 
-def test_clear_partitions_scheme_less_root_follows_default_fs(spark, tmp_path):
+def test_clear_partitions_scheme_less_root_follows_default_fs(spark, viewfs_default_fs):
     """A scheme-less root resolves against ``fs.defaultFS`` (HDFS on a
     cluster), so clear_partitions must delete through the Hadoop
     FileSystem API, not on the driver's local disk. Here the default FS
     is a viewfs whose mount maps ``<tmp>/graph`` onto ``<tmp>/mnt``: the
     writer's partitions land under the mount target, and a local delete
     of ``<tmp>/graph/...`` would leave them all in place."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    mount = f"fs.viewfs.mounttable.kg.link.{tmp_path}/graph"
-    old_default = hconf.get("fs.defaultFS")
-    hconf.set(mount, f"file://{tmp_path}/mnt")
-    hconf.set("fs.defaultFS", "viewfs://kg/")
-    try:
-        sink = GraphSink(str(tmp_path / "graph" / "sink"), n_buckets=2)
-        sink.write_partitions(sink.with_part_id(_builder(spark)(FX.transcripts_df(spark, 10, 2))))
-        target = tmp_path / "mnt" / "sink" / "triples"
-        assert sorted(d for d in os.listdir(target) if d.startswith("part_id=")), \
-            "the writer did not go through the viewfs mount"
+    local, mnt = viewfs_default_fs
+    sink = GraphSink(str(local / "sink"), n_buckets=2)
+    sink.write_partitions(sink.with_part_id(_builder(spark)(FX.transcripts_df(spark, 10, 2))))
+    target = mnt / "sink" / "triples"
+    assert sorted(d for d in os.listdir(target) if d.startswith("part_id=")), \
+        "the writer did not go through the viewfs mount"
 
-        sink.clear_partitions([0, 1], spark=spark)
-        leftover = [d for d in os.listdir(target) if d.startswith("part_id=")]
-        assert leftover == [], leftover
-    finally:
-        hconf.set("fs.defaultFS", old_default)
-        hconf.unset(mount)
+    sink.clear_partitions([0, 1], spark=spark)
+    leftover = [d for d in os.listdir(target) if d.startswith("part_id=")]
+    assert leftover == [], leftover
+
+
+def test_run_partitioned_scheme_less_root_follows_default_fs(spark, viewfs_default_fs):
+    """A scheme-less root under a cluster's default FS keeps the whole
+    sink there: triples AND manifest land under the mount target, nothing
+    on the driver's local disk, and a fresh sink on the same root — a
+    driver restarted on another node — finds every bucket done."""
+    local, mnt = viewfs_default_fs
+    t = FX.transcripts_df(spark, 20, 3)
+    root = str(local / "sink")
+    first = run_partitioned(spark, t, _builder(spark), GraphSink(root, n_buckets=2))
+    assert first["processed"] == [0, 1] and first["rows"] > 0
+    assert sorted(d for d in os.listdir(mnt / "sink" / "triples") if d.startswith("part_id="))
+    assert [n for n in os.listdir(mnt / "sink" / "manifest") if n.endswith(".json")]
+    assert not local.exists()
+
+    resumed = run_partitioned(spark, t, _builder(spark), GraphSink(root, n_buckets=2))
+    assert resumed["processed"] == [] and resumed["skipped"] == [0, 1]
 
 
 def test_partitioned_run_builds_link_dimension_once(spark, tmp_path, monkeypatch):
@@ -271,13 +312,12 @@ def test_foreign_partition_rows_fail_loudly(spark, tmp_path):
         run_partitioned(spark, t, bad_build, sink, batch_partitions=2)
 
 
-def test_manifest_on_file_scheme_root_round_trips(spark, tmp_path):
-    """A scheme-qualified root must route manifest records through the
-    Hadoop FileSystem API (one immutable file per record — object stores
-    have no append); the local-JSONL branch would write to a bogus path
-    and completed_partitions would silently return empty, re-running
-    every partition on resume."""
-    sink = GraphSink(f"file://{tmp_path}/muri", n_buckets=2)
+@pytest.mark.parametrize("scheme", ["file://", ""], ids=["file-uri", "scheme-less"])
+def test_manifest_on_file_scheme_root_round_trips(spark, tmp_path, scheme):
+    """Every root routes manifest records through the Hadoop FileSystem
+    API, one immutable file per record (object stores have no append),
+    scheme-qualified or not."""
+    sink = GraphSink(f"{scheme}{tmp_path}/muri", n_buckets=2)
     sink.record("run1", 0, "pending", spark=spark)
     sink.record("run1", 0, "done", rows=5, spark=spark)
     sink.record("run1", 1, "pending", spark=spark)
@@ -286,14 +326,17 @@ def test_manifest_on_file_scheme_root_round_trips(spark, tmp_path):
         (0, "pending"), (0, "done"), (1, "pending")]
     assert recs[1]["rows"] == 5
     assert sink.completed_partitions(spark=spark) == {0}
-    # records are individual files under <root>/manifest/
-    import os
-    # ignore Hadoop LocalFileSystem's .crc sidecars
+    # records are individual files under <root>/manifest/; ignore Hadoop
+    # LocalFileSystem's .crc sidecars
     names = sorted(
         n for n in os.listdir(str(tmp_path / "muri" / "manifest"))
         if not n.startswith(".")
     )
     assert len(names) == 3 and all(n.endswith(".json") for n in names)
+    # a driver killed inside record() leaves a torn newest file: read as absent
+    with open(tmp_path / "muri" / "manifest" / f"{'9' * 20}-torn.json", "w") as f:
+        f.write('{"run_id": "run1", "part_id": 1, "sta')
+    assert sink.manifest(spark=spark) == recs
 
 
 def test_join_delta_algebraic_property(spark):

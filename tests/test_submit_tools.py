@@ -9,10 +9,21 @@ from its manifest.
 
 from __future__ import annotations
 
+import json
+import os
+import signal
+import subprocess
+import time
 import zipfile
 
+from bench import SF_DIR
+from omop2obo_spark.sources.writers import GraphSink
 from tools.package_pyfiles import build
 from tools.submit_job import parse_args
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the generated sf corpora sit side by side (TESTDATA.md)
+SF = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.001")
 
 
 def test_pyfiles_zip_contains_package_only(tmp_path):
@@ -41,40 +52,107 @@ def test_submit_args_defaults_and_resume_contract():
     assert (b.buckets, b.batch_partitions, b.with_similarity, b.run_id) == (8, 2, True, "r1")
 
 
-def test_spark_submit_end_to_end_then_resume(tmp_path):
-    """The REAL launch shape, not a simulation: package --py-files, run
-    ``spark-submit`` as a subprocess against sf0.001, assert triples
-    land with a per-partition manifest — then rerun the identical
-    command and assert every bucket is skipped (checkpoint-resume)."""
-    import json
+def _submit(tmp_path, out_dir: str, *extra: str):
+    """``(cmd, env)`` of the real launch shape: package --py-files, then
+    ``spark-submit tools/submit_job.py`` on sf0.001 into ``out_dir``."""
     import shutil
-    import subprocess
+
     import pytest
 
     if shutil.which("spark-submit") is None:
         pytest.skip("spark-submit not on PATH")
-
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     zip_path = build(str(tmp_path / "pkg.zip"))
-    out_dir = str(tmp_path / "graph")
     cmd = [
         "spark-submit", "--master", "local[4]", "--py-files", zip_path,
-        os.path.join(repo, "tools", "submit_job.py"),
-        "--transcripts", "/root/testdata/sf0.001",
-        "--output", out_dir, "--lexicon", "fixture", "--buckets", "2",
+        os.path.join(REPO, "tools", "submit_job.py"),
+        "--transcripts", SF, "--output", out_dir, "--lexicon", "fixture", *extra,
     ]
-    env = {**os.environ, "PYTHONPATH": repo}
+    return cmd, {**os.environ, "PYTHONPATH": REPO}
 
-    def run():
-        p = subprocess.run(cmd, capture_output=True, text=True, timeout=560, env=env)
-        assert p.returncode == 0, p.stderr[-2000:]
-        return json.loads(p.stdout.strip().splitlines()[-1])
 
-    first = run()
+def _run(cmd, env) -> dict:
+    p = subprocess.run(cmd, capture_output=True, text=True, timeout=560, env=env)
+    assert p.returncode == 0, p.stderr[-2000:]
+    return json.loads(p.stdout.strip().splitlines()[-1])
+
+
+def test_spark_submit_end_to_end_then_resume(spark, tmp_path):
+    """The REAL launch shape, not a simulation: package --py-files, run
+    ``spark-submit`` as a subprocess against sf0.001, assert triples
+    land with a per-partition manifest — then rerun the identical
+    command and assert every bucket is skipped (checkpoint-resume)."""
+    out_dir = str(tmp_path / "graph")
+    cmd, env = _submit(tmp_path, out_dir, "--buckets", "2")
+
+    first = _run(cmd, env)
     assert first["processed"] == [0, 1] and first["rows"] > 0
-    assert os.path.exists(os.path.join(out_dir, "manifest.jsonl"))
+    done = {r["part_id"] for r in GraphSink(out_dir).manifest(spark=spark)
+            if r["status"] == "done"}
+    assert done == {0, 1}
 
-    second = run()
+    second = _run(cmd, env)
     assert second["processed"] == [] and second["skipped"] == [0, 1]
+
+
+def test_spark_submit_killed_mid_run_resumes_to_clean_output(spark, tmp_path):
+    """``kill -9`` of the whole spark-submit process group while bucket 1
+    is in flight (its 'pending' recorded, its 'done' not), then the same
+    command again: the resumed sink holds exactly a clean run's triples,
+    and the audit shows bucket 1 attempted twice."""
+    from omop2obo_spark.fixtures.generators import (
+        lexicon_df,
+        transcripts_from_documents,
+        vocab_map_dict,
+    )
+    from omop2obo_spark.plans.pipeline import run_pipeline
+    from omop2obo_spark.sources.writers import manifest_audit
+
+    out_dir = str(tmp_path / "graph")
+    cmd, env = _submit(tmp_path, out_dir, "--buckets", "4", "--batch-partitions", "1")
+    manifest_dir = os.path.join(out_dir, "manifest")
+
+    def n_records() -> int:
+        if not os.path.isdir(manifest_dir):
+            return 0
+        return sum(n.endswith(".json") and not n.startswith(".")
+                   for n in os.listdir(manifest_dir))
+
+    proc = subprocess.Popen(cmd, env=env, start_new_session=True,
+                            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    try:
+        deadline = time.time() + 400
+        # p0 pending, p0 done, p1 pending
+        while n_records() < 3:
+            assert proc.poll() is None, "the job ended before bucket 1 started"
+            assert time.time() < deadline, "no bucket-1 record in time"
+            time.sleep(0.05)
+    finally:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=60)
+    assert GraphSink(out_dir).completed_partitions(spark=spark) == {0}
+
+    resumed = _run(cmd, env)
+    assert resumed["skipped"] == [0] and resumed["processed"] == [1, 2, 3]
+
+    clean = run_pipeline(
+        spark, transcripts_from_documents(spark, SF), lexicon_df(spark), vocab_map_dict(),
+        with_similarity=False,
+    ).triples.select("subj", "pred", "obj").collect()
+    got = GraphSink(out_dir).read_triples(spark).select("subj", "pred", "obj").collect()
+    assert len(got) == len(set(got))  # no bucket written twice
+    assert set(got) == set(clean)
+
+    audit = {r.part_id: r for r in manifest_audit(spark, GraphSink(out_dir)).collect()}
+    assert audit[1].attempts >= 2 and audit[1].last_status == "done"
+
+
+def test_is_sf_dir_probes_the_default_fs(spark, viewfs_default_fs):
+    """A scheme-less path resolves against ``fs.defaultFS`` (HDFS on a
+    cluster): an sf dir that exists only there is still an sf dir."""
+    from tools.submit_job import _is_sf_dir
+
+    local, mnt = viewfs_default_fs
+    spark.createDataFrame([(1, "text")], "doc_id int, text string").write.parquet(
+        f"file://{mnt}/sf/documents.parquet")
+    assert _is_sf_dir(spark, str(local / "sf"))
+    assert not _is_sf_dir(spark, str(local / "missing"))

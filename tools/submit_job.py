@@ -37,7 +37,11 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="Iceberg table name (no slash) or parquet path; a "
                         "directory containing documents.parquet (testdata "
                         "sf dir) is converted to synthetic transcripts")
-    p.add_argument("--output", required=True, help="graph sink root (triples + manifest)")
+    p.add_argument("--output", required=True,
+                   help="graph sink root: <output>/triples/part_id=<k>/ and one "
+                        "manifest record per file under <output>/manifest/. "
+                        "Resolved like any Spark path: a scheme-less root "
+                        "lands on fs.defaultFS (HDFS on a cluster)")
     p.add_argument("--lexicon", default="fixture",
                    help="lexicon parquet path (sources/owl_prep.py output "
                         "shape) or 'fixture' for the built-in synthetic lexicon")
@@ -132,18 +136,14 @@ def main(argv: list[str]) -> int:
 
 def _is_sf_dir(spark, path: str) -> bool:
     """Is ``path`` a testdata sf directory (contains documents.parquet)?
-    Local paths use os.path; remote URIs (s3://, hdfs://) probe via a
-    zero-row schema read — os.path is always False for them, which would
-    silently misroute an sf dir on object storage into read_transcripts."""
-    import os
+    Probed through the Hadoop FileSystem API, which resolves the path like
+    the reader will: by its scheme, or against ``fs.defaultFS`` when it has
+    none (HDFS on a cluster, where a driver-local check would misroute an
+    sf dir into read_transcripts)."""
+    from omop2obo_spark.sources.writers import hadoop_path
 
-    if "://" not in path:
-        return os.path.isdir(path) and os.path.exists(os.path.join(path, "documents.parquet"))
-    try:
-        spark.read.parquet(f"{path.rstrip('/')}/documents.parquet").limit(0).collect()
-        return True
-    except Exception:
-        return False
+    jpath, fs = hadoop_path(f"{path.rstrip('/')}/documents.parquet", spark)
+    return fs.exists(jpath)
 
 
 if __name__ == "__main__":
