@@ -41,23 +41,17 @@ LINK_VALUE_COLS = [
 LINK_KEY_COLS = ["kind", "LINK_KEY"]
 
 
-def localize_dim(df: DataFrame, max_rows: int = 500_000) -> DataFrame:
-    """Collect a small dimension and rebuild it as a local literal relation.
+def localize_dim_checked(df: DataFrame, max_rows: int = 500_000) -> tuple[DataFrame, bool]:
+    """Collect a small dimension and rebuild it as a local literal relation;
+    also report whether the dimension fit (→ broadcast joins) or not
+    (→ shuffle joins, where the caller should salt skewed fact keys — see
+    :meth:`LinkDim.lookup`).
 
     Broadcasting a LocalTableScan requires no cluster job, so downstream
     BroadcastHashJoins never wait on scheduler slots to build their hash
     side. Falls back to ``persist()`` if the dimension exceeds
     ``max_rows`` (e.g. a full production MRCONSO) — then the collect cost
     is paid per broadcast site, but the plan is never recomputed.
-    """
-    local, _small = localize_dim_checked(df, max_rows)
-    return local
-
-
-def localize_dim_checked(df: DataFrame, max_rows: int = 500_000) -> tuple[DataFrame, bool]:
-    """Like :func:`localize_dim` but also reports whether the dimension fit
-    (→ broadcast joins) or not (→ shuffle joins, where the caller should
-    salt skewed fact keys — see :meth:`LinkDim.lookup`).
 
     The local rebuild goes through pandas: ``createDataFrame`` from Python
     rows yields a ``Scan ExistingRDD`` (parallelized — every broadcast
@@ -172,9 +166,9 @@ class LexiconDims:
         # Amdahl term). A LocalTableScan broadcasts with no job at all.
         # Dimensions are bounded (≤ a few 100k rows per ontology), so the
         # one-time driver collect is safe by construction.
-        dbxref = localize_dim(dbxref)
-        strings = localize_dim(strings)
-        labels = localize_dim(labels)
+        dbxref, _ = localize_dim_checked(dbxref)
+        strings, _ = localize_dim_checked(strings)
+        labels, _ = localize_dim_checked(labels)
         return cls(dbxref=dbxref, strings=strings, labels=labels, ont_keys=sorted(ont_keys))
 
 

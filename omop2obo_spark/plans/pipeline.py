@@ -21,11 +21,15 @@ final per-mention groupBy in compile (keys are (conv_id, turn_idx,
 mention_id): high-cardinality, skew-free). Each mention is linked by one
 lookup into the link dimension: broadcast, or salted above the broadcast
 budget. The TF-IDF tier only sees turns that produced no exact link.
+
+Input contract: ``(conv_id, turn_idx)`` is the transcript table's primary
+key (it is for the Iceberg source and every fixture); :func:`build_triples`
+relies on it to keep the mention-derived triples out of the distinct.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,20 +83,16 @@ KEY_COLS = ["conv_id", "turn_idx", "mention_id"]
 
 @dataclass
 class PipelineResult:
+    """The stage outputs of one :func:`run_pipeline` call. ``mentions``
+    (and, with the TF-IDF tier on, ``mappings``) start at a stage
+    checkpoint; the rest are lazy plans over them."""
+
     mentions: DataFrame
     exact_links: DataFrame
     sim_matches: DataFrame | None
     semtypes: DataFrame | None
     mappings: DataFrame
     triples: DataFrame
-    # executor caches still held by lazy plans (persist=False similarity
-    # runs); call unpersist_caches() once consumers have executed
-    cached_inputs: list[DataFrame] = field(default_factory=list)
-
-    def unpersist_caches(self) -> None:
-        for df in self.cached_inputs:
-            df.unpersist()
-        self.cached_inputs = []
 
 
 def _ancestor_level() -> dict:
@@ -149,18 +149,21 @@ def run_pipeline(
     mrsty: DataFrame | None = None,
     ancestors: DataFrame | None = None,
     with_similarity: bool = True,
-    persist: bool = True,
     dims: LexiconDims | None = None,
     checkpoint_dir: str | None = None,
-    assume_unique_turns: bool = True,
     context_channels: bool = False,
 ) -> PipelineResult:
     """Run the full transcripts→triples pipeline.
 
-    ``persist=True`` (default) checkpoints the stage boundaries that feed
-    several downstream branches — mentions, exact links, mappings — which
-    caches the data AND truncates the logical plan (Catalyst re-analyzes
-    the whole accumulated tree on every DataFrame operation).
+    ``transcripts`` must be keyed by ``(conv_id, turn_idx)`` (the module's
+    input contract). The stage boundaries that feed several downstream
+    branches are checkpointed eagerly, which caches the data AND truncates
+    the logical plan (Catalyst re-analyzes the whole accumulated tree on
+    every DataFrame operation): the mentions always, and with
+    ``with_similarity`` also the tokenized turns, the exact links and the
+    mappings. ``checkpoint_dir`` makes them durable parquet under
+    ``{checkpoint_dir}/{stage}``, which a later call with the same
+    directory overwrites; without it they are local checkpoints.
     """
     dims = dims or LexiconDims.from_lexicon(lexicon, vocab_map)
     term_dim = dims.strings.select(F.col("CODE").alias("surface"))
@@ -180,16 +183,16 @@ def run_pipeline(
         return df.localCheckpoint(eager=True)
 
     # ---- stage 1: mention detection -------------------------------------
-    mentions = detect_mentions(transcripts, term_dim, MAX_TERM_TOKENS)
-    if persist:
-        # EAGER stage-boundary checkpoint. Lineage truncation must happen
-        # before downstream plans are *constructed*, not just executed:
-        # Catalyst re-analyzes the full subtree on every DataFrame call,
-        # and with lazy truncation that analysis is single-threaded driver
-        # time (measured ~47 s at 1M turns — it was the scaling-efficiency
-        # killer, since it doesn't shrink with more cores). Eager
-        # materialization converts it into parallel cluster work.
-        mentions = _checkpoint(mentions, "mentions")
+    # EAGER stage-boundary checkpoint. Lineage truncation must happen
+    # before downstream plans are *constructed*, not just executed:
+    # Catalyst re-analyzes the full subtree on every DataFrame call, and
+    # with lazy truncation that analysis is single-threaded driver time
+    # (measured ~47 s at 1M turns — it was the scaling-efficiency killer,
+    # since it doesn't shrink with more cores). Eager materialization
+    # converts it into parallel cluster work.
+    mentions = _checkpoint(
+        detect_mentions(transcripts, term_dim, MAX_TERM_TOKENS), "mentions"
+    )
 
     # ---- stage 2: entity linking: one lookup per mention ----------------
     # every tier depends only on the mention's normalized code or lower-
@@ -252,7 +255,7 @@ def run_pipeline(
                 exact.filter(F.col("LEVEL") == "concept"), ancestors, dims.labels
             )
         )
-    if persist and with_similarity:
+    if with_similarity:
         # exact feeds two consumers only when the sim tier runs (compile +
         # the unlinked anti-join); with sim off it has a single consumer
         # and staying lazy lets Catalyst fuse the whole tail into one job.
@@ -277,13 +280,12 @@ def run_pipeline(
             F.concat_ws(":", "conv_id", "turn_idx", F.lit("sim"), F.lit(0)).alias("mention_id"),
             preprocess_tokens_expr(F.col("text")).alias("tokens"),
         ).where(F.size("tokens") > 0)
-        if persist:
-            # tokenized turns feed two consumers (corpus stats + scoring);
-            # checkpointing computes the preprocessing once AND truncates
-            # its expression tree — the stopword alternation + lemma
-            # exception map are large enough that every plan embedding
-            # them pays seconds of driver-side codegen per plan shape
-            all_queries = _checkpoint(all_queries, "sim_queries")
+        # tokenized turns feed two consumers (corpus stats + scoring);
+        # checkpointing computes the preprocessing once AND truncates its
+        # expression tree — the stopword alternation + lemma exception map
+        # are large enough that every plan embedding them pays seconds of
+        # driver-side codegen per plan shape
+        all_queries = _checkpoint(all_queries, "sim_queries")
         ont_corpus = build_ont_corpus(lexicon)
         norms, ont_vocab_df, n_docs = distributed_query_stats(all_queries, ont_corpus)
         model = fit_tfidf_ont_vocab(ont_corpus, ont_vocab_df, n_docs)
@@ -314,9 +316,8 @@ def run_pipeline(
         ).select(*KEY_COLS, "sim_uri", "score", "rank")
 
     # ---- stage 3: canonicalization --------------------------------------
-    leftover_caches: list[DataFrame] = []
     mappings = compile_mappings(exact, sim_matches, dims.labels, KEY_COLS, COMPILE_THRESHOLD)
-    if persist and with_similarity:
+    if with_similarity:
         mappings = _checkpoint(mappings, "mappings")
         # the eager checkpoint has fully executed the similarity scoring,
         # so the corpus-stats caches inside distributed_query_stats are
@@ -324,14 +325,9 @@ def run_pipeline(
         # re-read of PipelineResult.sim_matches just recomputes)
         for cached in getattr(norms, "cached_inputs", []):
             cached.unpersist()
-    elif with_similarity:
-        # persist=False: the stats caches are still referenced by the lazy
-        # sim/mapping plans — hand them to the caller for release after
-        # execution instead of leaking them for the session's lifetime
-        leftover_caches = list(getattr(norms, "cached_inputs", []))
 
     # ---- stage 4: triple materialization ---------------------------------
-    triples = build_triples(mentions, mappings, semtypes, assume_unique_turns)
+    triples = build_triples(mentions, mappings, semtypes)
 
     return PipelineResult(
         mentions=mentions,
@@ -342,7 +338,6 @@ def run_pipeline(
         semtypes=semtypes,
         mappings=mappings,
         triples=triples,
-        cached_inputs=leftover_caches,
     )
 
 
@@ -350,7 +345,6 @@ def build_triples(
     mentions: DataFrame,
     mappings: DataFrame,
     semtypes: DataFrame | None,
-    assume_unique_turns: bool = True,
 ) -> DataFrame:
     """Explode canonical mappings into (subj, pred, obj) rows.
 
@@ -358,14 +352,11 @@ def build_triples(
     conv_id/turn_idx ride along as partition/order columns (the north
     rule's stable (conv_id, turn_idx) ordering).
 
-    ``assume_unique_turns`` declares the input contract that
-    ``(conv_id, turn_idx)`` is the transcript table's primary key (it is
-    for the Iceberg source and every fixture). Under that contract
+    The output is a triple set when ``(conv_id, turn_idx)`` is the
+    transcript table's primary key (the module's input contract): then
     mentionOf/semtype rows are unique by construction and stay OUT of the
-    distinct shuffle (~1/3 of triple volume). Pass ``False`` for
-    dirty inputs (e.g. raw PERMISSIVE JSONL with possible duplicate turn
-    rows): the mention/semtype families then join the global distinct, so
-    the output is a set regardless of input duplication.
+    distinct shuffle (~1/3 of triple volume). Duplicate turn rows would
+    duplicate those two families.
     """
     subj = F.concat(F.lit("transcript:"), F.col("mention_id"))
 
@@ -414,8 +405,7 @@ def build_triples(
     # both use predicates disjoint from the mapping family, so unioning
     # them AFTER the distinct is set-identical to a global distinct while
     # keeping ~1/3 of the triple volume out of the shuffle and fully
-    # pipelined from the mention checkpoint. With assume_unique_turns=False
-    # they union BEFORE it (global distinct — duplicate turn rows collapse).
+    # pipelined from the mention checkpoint.
     mention_triples = mentions.select(
         "conv_id", "turn_idx",
         F.concat(F.lit("transcript:"), F.col("mention_id")).alias("subj"),
@@ -433,13 +423,7 @@ def build_triples(
             )
         )
 
-    if assume_unique_turns:
-        out = parts[0].dropDuplicates(["subj", "pred", "obj"])
-        for p in parts[1:]:
-            out = out.unionByName(p)
-    else:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out = out.dropDuplicates(["subj", "pred", "obj"])
+    out = parts[0].dropDuplicates(["subj", "pred", "obj"])
+    for p in parts[1:]:
+        out = out.unionByName(p)
     return out

@@ -167,7 +167,7 @@ def stream_triples(
             return
         res = run_pipeline(
             spark, batch_df, lexicon, vocab_map,
-            with_similarity=False, persist=True,
+            with_similarity=False,
         )
         res.triples.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(output_dir)
 

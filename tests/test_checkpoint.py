@@ -19,7 +19,7 @@ def _builder(spark):
 
     def build(transcripts):
         return run_pipeline(
-            spark, transcripts, lex, vm, with_similarity=False, persist=False
+            spark, transcripts, lex, vm, with_similarity=False
         ).triples
 
     return build
@@ -286,7 +286,7 @@ def test_partitioned_run_builds_link_dimension_once(spark, tmp_path, monkeypatch
     def build(transcripts):
         return run_pipeline(
             spark, transcripts, lex, vm, mrconso=mrconso, mrsty=mrsty,
-            with_similarity=False, persist=False, dims=dims,
+            with_similarity=False, dims=dims,
         ).triples
 
     sink = GraphSink(str(tmp_path / "g"), n_buckets=4)
@@ -294,6 +294,67 @@ def test_partitioned_run_builds_link_dimension_once(spark, tmp_path, monkeypatch
                               batch_partitions=1)
     assert len(summary["processed"]) == 4
     assert len(calls) == 1
+
+
+def _production_builder(spark, checkpoint_dir, with_similarity):
+    """``tools/submit_job.py``'s build: every tier, shared dims, durable
+    stage checkpoints under ``checkpoint_dir``."""
+    from omop2obo_spark.operators.linking import LexiconDims
+
+    lex, vm = FX.lexicon_df(spark), vocab_map_dict()
+    kw = dict(mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
+              ancestors=FX.ancestors_df(spark), with_similarity=with_similarity,
+              dims=LexiconDims.from_lexicon(lex, vm))
+
+    def build(transcripts, checkpoint_dir=checkpoint_dir):
+        return run_pipeline(spark, transcripts, lex, vm, checkpoint_dir=checkpoint_dir,
+                            **kw).triples
+
+    return build
+
+
+def _triple_rows(df):
+    return [(r.subj, r.pred, r.obj) for r in df.select("subj", "pred", "obj").collect()]
+
+
+def test_stage_checkpoints_one_vs_sixteen_batches(spark, tmp_path):
+    """The production path with durable stage checkpoints in ONE shared
+    directory: 16 one-bucket batches (each overwriting the previous
+    batch's checkpoints) write the same triple set as one 16-bucket
+    batch, with no duplicate rows, and both equal a run_pipeline call
+    that checkpoints locally. The TF-IDF tier is off here: its idf and
+    percentile are fit per batch, so its matches depend on the batching."""
+    t = FX.transcripts_df(spark, 16, 4)
+    build = _production_builder(spark, str(tmp_path / "ckpt"), with_similarity=False)
+    expected = set(_triple_rows(build(t, checkpoint_dir=None)))
+    assert expected
+
+    for batch_partitions in (None, 1):
+        sink = GraphSink(str(tmp_path / f"g{batch_partitions}"), n_buckets=16)
+        summary = run_partitioned(spark, t, build, sink, batch_partitions=batch_partitions)
+        assert summary["processed"] == list(range(16))
+        rows = _triple_rows(sink.read_triples(spark))
+        assert len(rows) == len(set(rows)), batch_partitions
+        assert set(rows) == expected, batch_partitions
+
+
+def test_durable_stage_checkpoints_with_similarity(spark, tmp_path):
+    """With the TF-IDF tier on, all four stage checkpoints land as
+    ``{checkpoint_dir}/{stage}`` parquet and the written triples equal a
+    run_pipeline call that checkpoints locally."""
+    t = FX.transcripts_df(spark, 16, 4)
+    ckpt = tmp_path / "ckpt"
+    build = _production_builder(spark, str(ckpt), with_similarity=True)
+    expected = set(_triple_rows(build(t, checkpoint_dir=None)))
+
+    sink = GraphSink(str(tmp_path / "g"), n_buckets=4)
+    run_partitioned(spark, t, build, sink)
+    rows = _triple_rows(sink.read_triples(spark))
+    assert len(rows) == len(set(rows))
+    assert set(rows) == expected
+    assert {p.name for p in ckpt.iterdir()} == {
+        "mentions", "exact_links", "sim_queries", "mappings"
+    }
 
 
 def test_foreign_partition_rows_fail_loudly(spark, tmp_path):

@@ -40,7 +40,7 @@ def _run(spark, rows, ctx=True, ancestors=None):
         spark, t, FX.lexicon_df(spark), vocab_map_dict(),
         mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
         ancestors=FX.ancestors_df(spark) if ancestors is None else ancestors,
-        with_similarity=False, persist=False, dims=FX.cached_dims(spark),
+        with_similarity=False, dims=FX.cached_dims(spark),
         context_channels=ctx,
     )
 

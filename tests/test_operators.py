@@ -296,12 +296,14 @@ def test_umls_annotate_salted_matches_broadcast_on_zipf_skew(spark):
 
 
 def test_localize_dim_produces_local_table_scan(spark):
-    """localize_dim must yield a LocalTableScan (broadcast builds need no
-    cluster job) — the pandas/Arrow path, not a parallelized ExistingRDD."""
-    from omop2obo_spark.operators.linking import localize_dim
+    """localize_dim_checked must yield a LocalTableScan (broadcast builds
+    need no cluster job) — the pandas/Arrow path, not a parallelized
+    ExistingRDD."""
+    from omop2obo_spark.operators.linking import localize_dim_checked
 
     df = spark.createDataFrame([("a", 1), ("b", None)], "k string, v int")
-    local = localize_dim(df)
+    local, fits = localize_dim_checked(df)
+    assert fits
     plan = local._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan, plan
     assert sorted(map(tuple, local.collect())) == [("a", 1), ("b", None)]

@@ -147,46 +147,29 @@ def test_pipeline_is_deterministic(spark):
     assert ta == tb
 
 
-def test_duplicate_turn_rows_with_unique_turns_false_yield_a_set(spark):
-    """The (conv_id, turn_idx) primary-key contract is explicit: with
-    assume_unique_turns=False a dirty input (duplicated turn rows, e.g.
-    raw PERMISSIVE JSONL) still emits a triple SET — including the
-    mentionOf/semtype families that normally skip the distinct."""
-    t = FX.transcripts_df(spark, 10, 4)
-    dirty = t.unionByName(t.limit(7))  # duplicate some turn rows verbatim
-    kwargs = dict(
-        mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
-        with_similarity=False, persist=False,
-    )
-    clean = run_pipeline(spark, t, FX.lexicon_df(spark), vocab_map_dict(), **kwargs)
-    res = run_pipeline(
-        spark, dirty, FX.lexicon_df(spark), vocab_map_dict(),
-        assume_unique_turns=False, **kwargs,
-    )
-    rows = [(r.subj, r.pred, r.obj) for r in res.triples.collect()]
-    assert len(rows) == len(set(rows))
-    assert sorted(rows) == sorted((r.subj, r.pred, r.obj) for r in clean.triples.collect())
+def test_similarity_corpus_stats_caches_released(spark, monkeypatch):
+    """The three corpus-stats caches distributed_query_stats persists
+    (docs_k, tf, dfq) are released once the mappings checkpoint has run
+    the scoring, not held for the session lifetime."""
+    from omop2obo_spark.plans import pipeline
 
+    captured = []
+    real = pipeline.distributed_query_stats
 
-def test_persist_false_similarity_caches_released(spark):
-    """persist=False similarity runs hand their corpus-stats caches to the
-    caller instead of leaking them for the session lifetime."""
-    t = FX.transcripts_df(spark, 15, 4)
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    res = run_pipeline(
-        spark, t, FX.lexicon_df(spark), vocab_map_dict(),
-        with_similarity=True, persist=False,
+    def spy(*a, **k):
+        out = real(*a, **k)
+        captured.extend(out[0].cached_inputs)
+        return out
+
+    monkeypatch.setattr(pipeline, "distributed_query_stats", spy)
+    run_pipeline(
+        spark, FX.transcripts_df(spark, 15, 4), FX.lexicon_df(spark), vocab_map_dict(),
+        with_similarity=True,
     )
-    assert res.triples.count() > 0
-    assert len(res.cached_inputs) == 3  # docs_k, tf, dfq
-    assert all(df.storageLevel.useMemory or df.storageLevel.useDisk
-               for df in res.cached_inputs)
-    res.unpersist_caches()
-    assert res.cached_inputs == []
-    # no NEW persistent RDDs outlive the run (module-scoped fixtures may
-    # legitimately hold theirs)
-    assert jsc.getPersistentRDDs().size() <= before
+    assert len(captured) == 3
+    for df in captured:
+        level = df.storageLevel
+        assert not (level.useMemory or level.useDisk), level
 
 
 def test_run_pipeline_accepts_ancestor_closure_output(spark):
@@ -197,11 +180,11 @@ def test_run_pipeline_accepts_ancestor_closure_output(spark):
     with_depth = FX.ancestors_df(spark).withColumn("depth", F.lit(1))
     res_a = run_pipeline(
         spark, t, FX.lexicon_df(spark), vocab_map_dict(),
-        ancestors=with_depth, with_similarity=False, persist=False,
+        ancestors=with_depth, with_similarity=False,
     )
     res_b = run_pipeline(
         spark, t, FX.lexicon_df(spark), vocab_map_dict(),
-        ancestors=FX.ancestors_df(spark), with_similarity=False, persist=False,
+        ancestors=FX.ancestors_df(spark), with_similarity=False,
     )
     a = sorted(map(tuple, res_a.triples.collect()))
     b = sorted(map(tuple, res_b.triples.collect()))

@@ -25,7 +25,7 @@ def test_kg_pipeline_joins_all_broadcast(spark):
     res = run_pipeline(
         spark, tr, FX.lexicon_df(spark), vocab_map_dict(),
         mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
-        ancestors=FX.ancestors_df(spark), with_similarity=False, persist=False,
+        ancestors=FX.ancestors_df(spark), with_similarity=False,
     )
     plan = _plan(res.triples)
     assert "SortMergeJoin" not in plan, plan
@@ -46,7 +46,7 @@ def test_link_dimension_above_broadcast_budget_joins_salted(spark, monkeypatch):
         return run_pipeline(
             spark, tr, FX.lexicon_df(spark), vocab_map_dict(),
             mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
-            ancestors=FX.ancestors_df(spark), with_similarity=False, persist=False,
+            ancestors=FX.ancestors_df(spark), with_similarity=False,
         ).triples
 
     def triple_set(df):
@@ -91,7 +91,7 @@ def test_context_channel_pipeline_plan_stays_scale_safe(spark):
     res = run_pipeline(
         spark, tr, FX.lexicon_df(spark), vocab_map_dict(),
         mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
-        ancestors=ancestors, with_similarity=False, persist=False,
+        ancestors=ancestors, with_similarity=False,
         context_channels=True,
     )
     rep = plan_report(res.triples)

@@ -482,7 +482,7 @@ def test_context_channel_triples_match_reference_code(spark):
     res = run_pipeline(
         spark, t, FX.lexicon_df(spark), vocab_map_dict(),
         mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
-        ancestors=ancestors, with_similarity=False, persist=False,
+        ancestors=ancestors, with_similarity=False,
         dims=FX.cached_dims(spark), context_channels=True,
     )
 

@@ -80,12 +80,16 @@ def test_spark_submit_end_to_end_then_resume(spark, tmp_path):
     """The REAL launch shape, not a simulation: package --py-files, run
     ``spark-submit`` as a subprocess against sf0.001, assert triples
     land with a per-partition manifest — then rerun the identical
-    command and assert every bucket is skipped (checkpoint-resume)."""
+    command and assert every bucket is skipped (checkpoint-resume). The
+    run's stage checkpoints live under ``<checkpoint-dir>/<run_id>`` and
+    are gone once it completes."""
     out_dir = str(tmp_path / "graph")
-    cmd, env = _submit(tmp_path, out_dir, "--buckets", "2")
+    ckpt = tmp_path / "ckpt"
+    cmd, env = _submit(tmp_path, out_dir, "--buckets", "2", "--checkpoint-dir", str(ckpt))
 
     first = _run(cmd, env)
     assert first["processed"] == [0, 1] and first["rows"] > 0
+    assert ckpt.is_dir() and not (ckpt / first["run_id"]).exists()
     done = {r["part_id"] for r in GraphSink(out_dir).manifest(spark=spark)
             if r["status"] == "done"}
     assert done == {0, 1}

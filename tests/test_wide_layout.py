@@ -37,7 +37,7 @@ def _run(spark, small_inputs, umls: bool, ancestors: bool, **kw):
         mrconso=FX.mrconso_df(spark) if umls else None,
         mrsty=FX.mrsty_df(spark) if umls else None,
         ancestors=FX.ancestors_df(spark) if ancestors else None,
-        with_similarity=False, persist=False, **kw,
+        with_similarity=False, **kw,
     )
 
 
@@ -60,7 +60,7 @@ def test_wide_layout_includes_similarity_blocks(spark, small_inputs):
     tr, lex, vm = small_inputs
     res = run_pipeline(
         spark, tr, lex, vm, mrconso=None, mrsty=None, ancestors=None,
-        with_similarity=True, persist=False,
+        with_similarity=True,
     )
     wide = wide_mapping_layout(res.mappings, KEY_COLS, ONTS)
     for o in ONTS:
@@ -109,7 +109,7 @@ def test_double_merge_expands_rows(spark, small_inputs):
         "CUI string, LANG string, SAB string, CODE string",
     )
     res = run_pipeline(spark, tr, lex, vm, mrconso=mr, mrsty=FX.mrsty_df(spark),
-                       ancestors=None, with_similarity=False, persist=False)
+                       ancestors=None, with_similarity=False)
     codes = {r.CODE for r in res.exact_links.select("CODE").distinct().collect()}
     assert "umls:c0000744" in codes  # only reachable via merge 2
 

@@ -18,6 +18,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # query name → what a reviewer should notice in the plan
 NOTES = {
     "q_kg_triples": (
+        "The plan starts at the mention checkpoint run_pipeline always "
+        "takes (a scan of the checkpointed RDD, not the mention scan). "
         "Each mention is linked by ONE BroadcastHashJoin into the link "
         "dimension (every linking tier, built once, as a LocalTableScan: "
         "no job to build the broadcast side, no SortMergeJoin anywhere); "
@@ -126,8 +128,9 @@ def main() -> int:
     qs = dict(entry.queries())
 
     def kg_uncached(spark, sf_dir):
-        # bypass entry's session cache (it localCheckpoints, which would
-        # show a bare RDD scan here) so the full linking plan is visible
+        # bypass entry's session cache (it localCheckpoints the triples,
+        # which would show a bare RDD scan here) so the linking plan from
+        # run_pipeline's mention checkpoint on is visible
         from omop2obo_spark import fixtures as FX
         from omop2obo_spark.fixtures.generators import (
             transcripts_from_documents, vocab_map_dict,
@@ -139,7 +142,6 @@ def main() -> int:
             FX.lexicon_df(spark), vocab_map_dict(),
             mrconso=FX.mrconso_df(spark), mrsty=FX.mrsty_df(spark),
             ancestors=FX.ancestors_df(spark), with_similarity=False,
-            persist=False,
         )
         return res.triples
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import uuid
 
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
@@ -65,8 +66,13 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                         "recommended on a real cluster: the default "
                         "localCheckpoint truncates lineage into executor "
                         "memory, so an executor loss kills the batch instead "
-                        "of recomputing (plans/pipeline.py checkpoint_dir)")
-    p.add_argument("--run-id", default=None)
+                        "of recomputing (plans/pipeline.py checkpoint_dir). "
+                        "Each run writes under <checkpoint-dir>/<run-id>/ and "
+                        "deletes it when the run completes, so jobs may share "
+                        "the root")
+    p.add_argument("--run-id", default=None,
+                   help="manifest run id and checkpoint subdirectory; "
+                        "default a fresh random id")
     return p.parse_args(argv)
 
 
@@ -90,7 +96,7 @@ def main(argv: list[str]) -> int:
         read_mrsty_rrf,
         read_transcripts,
     )
-    from omop2obo_spark.sources.writers import GraphSink
+    from omop2obo_spark.sources.writers import GraphSink, hadoop_path
 
     src = args.transcripts
     if src.endswith("documents.parquet") or ("/" in src and _is_sf_dir(spark, src)):
@@ -116,19 +122,28 @@ def main(argv: list[str]) -> int:
     mrsty = read_mrsty_rrf(spark, args.mrsty) if args.mrsty else None
     ancestors = spark.read.parquet(args.ancestors) if args.ancestors else None
 
+    # stage checkpoints are keyed by run so jobs sharing the root never
+    # overwrite each other; a run's batches overwrite one another in turn,
+    # which is safe because each batch commits before the next one builds
+    run_id = args.run_id or uuid.uuid4().hex[:12]
+    ckpt = f"{args.checkpoint_dir}/{run_id}" if args.checkpoint_dir else None
+
     def build(tr_subset):
         return run_pipeline(
             spark, tr_subset, lexicon, vocab_map,
             mrconso=mrconso, mrsty=mrsty, ancestors=ancestors,
             with_similarity=args.with_similarity, dims=dims,
-            checkpoint_dir=args.checkpoint_dir,
+            checkpoint_dir=ckpt,
         ).triples
 
     sink = GraphSink(args.output, n_buckets=args.buckets)
     summary = run_partitioned(
         spark, transcripts, build, sink,
-        batch_partitions=args.batch_partitions, run_id=args.run_id,
+        batch_partitions=args.batch_partitions, run_id=run_id,
     )
+    if ckpt:
+        jpath, fs = hadoop_path(ckpt, spark)
+        fs.delete(jpath, True)
     print(json.dumps(summary))
     spark.stop()
     return 0
