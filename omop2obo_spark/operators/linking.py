@@ -3,9 +3,10 @@ matching — the Spark re-expression of the reference's ConceptAnnotator
 (/root/reference/omop2obo/clinical_concept_annotator.py).
 
 The tier functions are DataFrame→DataFrame and generic over the key
-columns: they serve the reference-parity path (key=CONCEPT_ID), the
-streaming path and the link dimension. Every tier depends only on a
-mention's normalized code or lower-cased surface, never on its turn, so
+columns: they serve the reference-parity path (key=CONCEPT_ID) and the
+link dimension, in which the batch and streaming paths look mentions up.
+Every tier depends only on a mention's normalized code or lower-cased
+surface, never on its turn, so
 :func:`build_link_dim` runs them once over that key domain into one
 dimension keyed by ``(kind, LINK_KEY)``, and the pipeline links each
 mention with a single lookup into it (:meth:`LinkDim.lookup`).
@@ -247,7 +248,6 @@ def dbxref_link(
     key_cols: list[str],
     level: str,
     umls: DataFrame | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """DbXRef tier (J4) + OHDSI-Ananke UMLS-CUI bridge (J5).
 
@@ -297,7 +297,7 @@ def dbxref_link(
     )
     # full-row distinct: deterministic set semantics (a subset dedup over
     # rows differing in rank columns would pick an arbitrary winner)
-    return out.dropDuplicates() if dedup else out
+    return out.dropDuplicates()
 
 
 def exact_string_link(

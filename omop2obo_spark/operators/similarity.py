@@ -30,6 +30,7 @@ Physical strategy (SURVEY.md §4.3):
 from __future__ import annotations
 
 import math
+from collections import Counter
 from collections.abc import Iterator
 
 import numpy as np
@@ -181,6 +182,11 @@ def query_df_counts(
     return {r.g: int(r["count"]) for r in counts}, n_docs
 
 
+def _ont_doc_freqs(ont_corpus: list[tuple[str, list[str]]]) -> dict[str, int]:
+    """n-gram → number of ontology strings containing it."""
+    return Counter(g for _id, toks in ont_corpus for g in set(ngrams(toks)))
+
+
 def distributed_query_stats(
     queries: DataFrame,
     ont_corpus: list[tuple[str, list[str]]],
@@ -249,10 +255,7 @@ def distributed_query_stats(
     dfq = tf.groupBy("g").agg(F.count("*").alias("dfq")).persist()  # docs-per-gram
 
     # ontology-side dfs (driver-side: ont corpus is small by construction)
-    ont_df_counts: dict[str, int] = {}
-    for _id, toks in ont_corpus:
-        for g in set(ngrams(toks)):
-            ont_df_counts[g] = ont_df_counts.get(g, 0) + 1
+    ont_df_counts = _ont_doc_freqs(ont_corpus)
     ont_df_df = spark.createDataFrame(
         list(ont_df_counts.items()) or [("", 0)], "g string, dfo long"
     )
@@ -286,10 +289,7 @@ def fit_tfidf_ont_vocab(
     that contribute to x·o), with idf still computed over the FULL union
     corpus (query dfs from :func:`distributed_query_stats`). Pairs with
     per-doc norms for exact cosine parity with :func:`fit_tfidf`."""
-    df_counts: dict[str, int] = {}
-    for _id, toks in ont_corpus:
-        for g in set(ngrams(toks)):
-            df_counts[g] = df_counts.get(g, 0) + 1
+    df_counts = _ont_doc_freqs(ont_corpus)
     vocab = {g: i for i, g in enumerate(sorted(df_counts))}
     n_docs = n_query_docs + len(ont_corpus)
     idf = np.empty(len(vocab), dtype=np.float64)

@@ -164,6 +164,13 @@ def run_pipeline(
     mappings. ``checkpoint_dir`` makes them durable parquet under
     ``{checkpoint_dir}/{stage}``, which a later call with the same
     directory overwrites; without it they are local checkpoints.
+
+    With ``with_similarity`` the TF-IDF scores depend on which turns are in
+    ``transcripts``: idf and each document's l2 norm are fit over this
+    call's turns (∪ the ontology strings), so a partitioned run's triples
+    depend on its batch layout. The top-N cut, the floor and the
+    percentile cut are per document and do not. The exact tiers are
+    per-mention and layout-independent.
     """
     dims = dims or LexiconDims.from_lexicon(lexicon, vocab_map)
     term_dim = dims.strings.select(F.col("CODE").alias("surface"))

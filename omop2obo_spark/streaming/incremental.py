@@ -6,18 +6,18 @@ a transcript table at 10^12-turn scale is append-heavy, and incremental
 processing of *new* conversations is the natural companion to the batch
 backfill. Two modes:
 
-* ``stream_code_mentions`` — fully streaming (stateless transforms +
-  broadcast joins are streaming-safe): readStream → code-mention
-  extraction → dbxref linking → append sink, with a watermark dedup on
-  (conv_id, turn_idx, pos) for at-least-once sources.
-* ``stream_triples`` — ``foreachBatch`` wrapper running the full batch
-  pipeline (exact tiers) per micro-batch: the idiomatic escape hatch for
-  logic that needs self-joins/windows a pure stream can't express. Each
-  micro-batch append is idempotent per (subj, pred, obj) on read.
-* ``stream_dedup_against`` — ``foreachBatch`` incremental dedup against
-  an accumulating content-hash ledger (all history, no watermark
-  horizon), with batch_id-partitioned dynamic-overwrite writes for
-  idempotent retries.
+* ``stream_code_mentions`` / ``stream_mention_rates`` — fully streaming
+  (stateless transforms + stream-static joins): readStream → code-mention
+  keys → one lookup into the batch pipeline's link dimension
+  (:class:`~omop2obo_spark.operators.linking.LinkDim`) → append sink, with
+  a watermark dedup for at-least-once sources.
+* ``foreachBatch`` sinks (``stream_triples``, ``stream_drift_monitor``,
+  ``stream_dedup_against``, ``stream_heavy_hitters``) — the idiomatic
+  escape hatch for logic that needs self-joins/windows a pure stream
+  can't express. Every one writes through :func:`_overwrite_batch`: its
+  output is PARTITIONED BY batch_id with dynamic partition overwrite, so
+  a replayed micro-batch (foreachBatch is at-least-once) replaces its own
+  partition instead of appending a second copy.
 
 All default to ``Trigger.AvailableNow`` — drain what exists, then stop —
 which is also how the tests drive them deterministically.
@@ -28,9 +28,59 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from omop2obo_spark.config import BROADCAST_DIM_MAX_ROWS, SALT_BUCKETS
 from omop2obo_spark.fixtures.generators import TRANSCRIPTS_SCHEMA
-from omop2obo_spark.operators.linking import LexiconDims, dbxref_link
+from omop2obo_spark.functions.normalize import normalize_source_codes
+from omop2obo_spark.operators.linking import LINK_VALUE_COLS, LexiconDims
 from omop2obo_spark.plans.mention import CODE_PATTERN
+from omop2obo_spark.plans.pipeline import KEY_COLS, run_pipeline
+
+
+def _code_mention_keys(stream: DataFrame, vocab_map: dict[str, str]) -> DataFrame:
+    """A transcript stream's code mentions as link-dimension keys:
+    ``conv_id, turn_idx, ts, pos, mention_id, kind='code', LINK_KEY``.
+
+    The batch pipeline's CODE_PATTERN and ``normalize_source_codes``, so
+    batch backfill and incremental ingestion extract and key the same
+    mentions; ``ts`` stays so a watermarked dedup can bound its state.
+    """
+    mentions = stream.select(
+        "conv_id", "turn_idx", "ts",
+        F.posexplode(
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(CODE_PATTERN), 1)
+        ).alias("pos", "surface"),
+    )
+    return mentions.select(
+        "conv_id", "turn_idx", "ts", "pos",
+        F.concat_ws(":", "conv_id", "turn_idx", F.lit("code"), "pos").alias("mention_id"),
+        F.lit("code").alias("kind"),
+        normalize_source_codes(F.col("surface"), vocab_map).alias("LINK_KEY"),
+    )
+
+
+def _link_code_mentions(
+    keys: DataFrame, lexicon: DataFrame, vocab_map: dict[str, str]
+) -> DataFrame:
+    """Link code-mention keys through the link dimension (no MRCONSO):
+    the keys' columns plus ``LINK_VALUE_COLS``. A stream-static join, so
+    it adds no streaming state."""
+    link_dim = LexiconDims.from_lexicon(lexicon, vocab_map).link_dim(
+        None, None, vocab_map, BROADCAST_DIM_MAX_ROWS, SALT_BUCKETS
+    )
+    return link_dim.lookup(keys, link_dim.links, KEY_COLS)
+
+
+def _overwrite_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` as the ``batch_id`` partition of ``path`` with dynamic
+    partition overwrite: a replayed micro-batch (same batch id, same
+    files) replaces its own partition instead of appending a second copy."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .write.partitionBy("batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(path)
+    )
 
 
 def stream_code_mentions(
@@ -42,46 +92,24 @@ def stream_code_mentions(
     vocab_map: dict[str, str],
     watermark: str = "1 hour",
 ):
-    """Streaming code-mention linking: parquet source → linked mentions.
+    """Streaming code-mention linking: parquet source → linked mentions
+    (``KEY_COLS + LINK_VALUE_COLS``, the batch pipeline's code-mention
+    ``exact_links``).
 
-    Stateless except the watermarked dropDuplicates; every join is against
-    a broadcast dimension, so the plan is streaming-legal without
-    stream-stream joins.
+    Stateless except the watermarked dropDuplicates on (conv_id, turn_idx,
+    pos), which runs before the lookup so ``ts`` can bound its state; the
+    link-dimension lookup is a stream-static join, so the plan is
+    streaming-legal without stream-stream joins. A same-mention duplicate
+    link row is left to the batch compaction that reads this sink.
     """
-    from omop2obo_spark.functions.normalize import normalize_source_codes
-
-    dims = LexiconDims.from_lexicon(lexicon, vocab_map)
     stream = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)
         .withWatermark("ts", watermark)
     )
-    # inline code-mention extraction keeping ts so the watermarked dedup
-    # can bound its state (at-least-once sources re-deliver files)
-    mentions = stream.select(
-        "conv_id", "turn_idx", "ts",
-        F.posexplode(
-            # the batch pipeline's CODE_PATTERN — one definition, so batch
-            # backfill and incremental ingestion extract the same mentions
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(CODE_PATTERN), 1)
-        ).alias("pos", "surface"),
-    ).withColumn(
-        "mention_id", F.concat_ws(":", "conv_id", "turn_idx", F.lit("code"), "pos")
-    ).dropDuplicatesWithinWatermark(["conv_id", "turn_idx", "pos"])
-    stacked = mentions.select(
-        "conv_id", "turn_idx", "mention_id",
-        normalize_source_codes(F.col("surface"), vocab_map).alias("CODE"),
-        F.lit("TURN_CODE").alias("CODE_COLUMN"),
-        F.lit(0).alias("src_rank"),
-    ).where(F.col("CODE").isNotNull())
-    # dedup=False: the tier's full-row dropDuplicates would be an UNBOUNDED
-    # stateful op here (ts was projected away, so no watermark can evict
-    # its state); the watermarked (conv, turn, pos) dedup above already
-    # bounds re-delivery, and a same-mention duplicate link row is handled
-    # by the batch compaction that reads this sink (same reasoning as
-    # stream_mention_rates below)
-    linked = dbxref_link(
-        stacked, dims, ["conv_id", "turn_idx", "mention_id"], "concept", dedup=False
+    keys = _code_mention_keys(stream, vocab_map).dropDuplicatesWithinWatermark(
+        ["conv_id", "turn_idx", "pos"]
     )
+    linked = _link_code_mentions(keys, lexicon, vocab_map).select(*KEY_COLS, *LINK_VALUE_COLS)
     return (
         linked.writeStream.format("parquet")
         .option("path", output_dir)
@@ -156,20 +184,22 @@ def stream_triples(
 ):
     """Full exact-tier pipeline per micro-batch via foreachBatch.
 
-    The streaming engine provides source tracking + exactly-once batch ids;
-    the batch pipeline provides the linking semantics. New transcript files
-    appended to ``input_dir`` are picked up on the next trigger.
+    The streaming engine provides source tracking + batch ids; the batch
+    pipeline provides the linking semantics, with one ``LexiconDims`` (and
+    so one link dimension) per query, not per micro-batch. New transcript
+    files appended to ``input_dir`` are picked up on the next trigger.
+    Each batch's triples overwrite its ``batch_id`` partition
+    (:func:`_overwrite_batch`), so a replayed batch does not duplicate them.
     """
-    from omop2obo_spark.plans.pipeline import run_pipeline
+    dims = LexiconDims.from_lexicon(lexicon, vocab_map)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         res = run_pipeline(
-            spark, batch_df, lexicon, vocab_map,
-            with_similarity=False,
+            spark, batch_df, lexicon, vocab_map, with_similarity=False, dims=dims
         )
-        res.triples.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(output_dir)
+        _overwrite_batch(res.triples, batch_id, output_dir)
 
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)
     return (
@@ -249,48 +279,28 @@ def stream_mention_rates(
     watermark: str = "30 minutes",
 ):
     """Watermarked tumbling-window entity link rates — the streaming face
-    of operators/temporal.py:entity_bursts. Code mentions are extracted
-    and dbxref-linked inline (broadcast dimensions only, streaming-legal),
-    then aggregated per (event-time window, URI); append mode emits each
+    of operators/temporal.py:entity_bursts. Code mentions are linked
+    through the link dimension (a stream-static join, like
+    :func:`stream_code_mentions`), deduplicated per (mention, URI) and
+    aggregated per (event-time window, URI); append mode emits each
     window exactly once, when the watermark passes its end, so late
     transcript files inside the horizon still count and later ones are
     dropped rather than double-emitted.
 
-    Scale shape: the only stateful operator is the windowed aggregate,
-    whose state is bounded by (#live windows × #entities) — dimension
-    scale, not fact scale; the watermark evicts closed windows. One
-    shuffle on the (window, URI) key; extraction and linking are
-    stateless map-side work against broadcast dims.
+    Scale shape: the stateful operators are the (mention, URI) dedup and
+    the windowed aggregate, whose state is bounded by (#live windows ×
+    #entities) — dimension scale, not fact scale; the watermark evicts
+    both. One shuffle on the (window, URI) key; extraction and linking
+    are stateless map-side work against the link dimension.
     """
-    from omop2obo_spark.functions.normalize import normalize_source_codes
-
-    dims = LexiconDims.from_lexicon(lexicon, vocab_map)
     stream = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)
         .withWatermark("ts", watermark)
     )
-    mentions = stream.select(
-        "conv_id", "turn_idx", "ts",
-        F.posexplode(
-            # the batch pipeline's CODE_PATTERN — one definition, so batch
-            # backfill and incremental ingestion extract the same mentions
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(CODE_PATTERN), 1)
-        ).alias("pos", "surface"),
-    ).withColumn(
-        "mention_id", F.concat_ws(":", "conv_id", "turn_idx", F.lit("code"), "pos")
-    )
-    stacked = mentions.select(
-        "conv_id", "turn_idx", "mention_id", "ts",
-        normalize_source_codes(F.col("surface"), vocab_map).alias("CODE"),
-        F.lit("TURN_CODE").alias("CODE_COLUMN"),
-        F.lit(0).alias("src_rank"),
-    ).where(F.col("CODE").isNotNull())
-    # dedup=False: the tier's full-row distinct would be an unbounded
-    # stateful op on a stream; the watermarked per-(mention, URI) dedup
-    # below gives the same per-mention counting with bounded state.
-    linked = dbxref_link(
-        stacked, dims, ["conv_id", "turn_idx", "mention_id", "ts"], "concept",
-        dedup=False,
+    # the watermarked per-(mention, URI) dedup gives per-mention counting
+    # with bounded state (a full-row distinct would be unbounded)
+    linked = _link_code_mentions(
+        _code_mention_keys(stream, vocab_map), lexicon, vocab_map
     ).dropDuplicatesWithinWatermark(["conv_id", "turn_idx", "mention_id", "URI"])
     rates = (
         linked.groupBy(F.window("ts", window).alias("win"), F.col("URI"))
@@ -390,13 +400,7 @@ def stream_drift_monitor(
             "cat",
             *psi_term_columns(eps),  # identical arithmetic to psi_drift
         )
-        (
-            out.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(output_dir)
-        )
+        _overwrite_batch(out, batch_id, output_dir)
 
     return (
         win_counts.writeStream.foreachBatch(emit)
@@ -486,23 +490,10 @@ def stream_dedup_against(
             )
             .join(ledger, on="text_hash", how="left_anti")
         )
-        (
-            kept.drop("text_hash")
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(output_dir)
-        )
-        (
-            kept.select("text_hash")
-            .filter(F.col("text_hash").isNotNull())
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(ledger_dir)
+        _overwrite_batch(kept.drop("text_hash"), batch_id, output_dir)
+        _overwrite_batch(
+            kept.select("text_hash").filter(F.col("text_hash").isNotNull()).distinct(),
+            batch_id, ledger_dir,
         )
 
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_dir)
@@ -556,14 +547,7 @@ def stream_heavy_hitters(
         toks = batch_df.select(
             F.explode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok")
         )
-        (
-            cms_build(toks, depth=depth, width=width)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(sketch_dir)
-        )
+        _overwrite_batch(cms_build(toks, depth=depth, width=width), batch_id, sketch_dir)
 
     return (
         stream.writeStream.foreachBatch(emit)

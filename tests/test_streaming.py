@@ -1,18 +1,25 @@
 """Structured Streaming: incremental ingestion picks up only new files and
 produces the same links the batch path would."""
 
+from collections import Counter
+from datetime import datetime
+
 from pyspark.sql import functions as F
 
 from omop2obo_spark import fixtures as FX
-from omop2obo_spark.fixtures.generators import vocab_map_dict
+from omop2obo_spark.fixtures.generators import TRANSCRIPTS_SCHEMA, vocab_map_dict
+from omop2obo_spark.operators.linking import LINK_VALUE_COLS
+from omop2obo_spark.plans.pipeline import KEY_COLS, run_pipeline
 from omop2obo_spark.streaming.incremental import stream_code_mentions, stream_triples
 
 
-def _write_batch(spark, path, n_convs, offset=0):
+def _write_batch(spark, path, n_convs, offset=0, extra_rows=()):
     t = FX.transcripts_df(spark, n_convs, 5)
     t = t.withColumn(
         "conv_id", F.concat(F.lit(f"b{offset}_"), F.col("conv_id"))
     )
+    if extra_rows:
+        t = t.unionByName(spark.createDataFrame(list(extra_rows), TRANSCRIPTS_SCHEMA))
     t.write.mode("append").parquet(path)
     return t
 
@@ -34,15 +41,27 @@ def test_stream_code_mentions_incremental(spark, tmp_path):
     q.awaitTermination(120)
     assert spark.read.parquet(out).count() == n1
 
-    # new files arrive → only they are processed
-    _write_batch(spark, src, 10, offset=1)
+    # new files arrive → only they are processed; the hand-written turn
+    # carries a umls: code (a key the link dimension also stacks as its
+    # bare CUI) and a source code the vocab map renames
+    hand = ("b1_hand", 0, "user", "coded as umls:c0000744 and snomedct_us:190787008",
+            None, datetime(2026, 1, 1))
+    _write_batch(spark, src, 10, offset=1, extra_rows=[hand])
     q = stream_code_mentions(spark, src, out, ckpt, lex, vm).start()
     q.awaitTermination(120)
     n3 = spark.read.parquet(out).count()
     assert n3 > n1
     got = spark.read.parquet(out)
-    # streaming output matches what the batch operators produce on the union
     assert got.count() == got.dropDuplicates(["mention_id", "URI", "CODE"]).count()
+    # streaming output matches what the batch pipeline links on the union
+    cols = KEY_COLS + LINK_VALUE_COLS
+    want = run_pipeline(
+        spark, spark.read.parquet(src), lex, vm, with_similarity=False
+    ).exact_links.where(F.col("mention_id").contains(":code:"))
+    got_rows = Counter(map(tuple, got.select(cols).collect()))
+    assert got_rows == Counter(map(tuple, want.select(cols).collect()))
+    hand = {(r.mention_id, r.CODE) for r in got.where(F.col("conv_id") == "b1_hand").collect()}
+    assert hand == {("b1_hand:0:code:0", "umls:c0000744"), ("b1_hand:0:code:1", "snomed:190787008")}
 
 
 def test_stream_triples_foreachbatch(spark, tmp_path):
@@ -66,8 +85,22 @@ def test_stream_triples_foreachbatch(spark, tmp_path):
     q = stream_triples(spark, src, out, ckpt, lex, vm).start()
     q.awaitTermination(180)
     after = spark.read.parquet(out)
-    assert after.count() > n1
+    n2 = after.count()
+    assert n2 > n1
     assert after.select("batch_id").distinct().count() >= 2
+
+    # replay: drop the checkpoint's last commit (a crash after the sink
+    # wrote but before the query committed), so the restart re-runs that
+    # batch id over the same files. Its partition overwrite keeps one copy
+    # where a blind append doubles the batch. (A fresh checkpoint is no
+    # replay here: it regroups both files into one batch 0.)
+    commits = tmp_path / "ckpt2" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    q = stream_triples(spark, src, out, ckpt, lex, vm).start()
+    q.awaitTermination(180)
+    assert spark.read.parquet(out).count() == n2
 
 
 def test_stateful_conversation_tracking_survives_restart(spark, tmp_path):

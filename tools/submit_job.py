@@ -58,9 +58,15 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--buckets", type=int, default=256,
                    help="sink bucket count == resume/lineage granularity")
     p.add_argument("--batch-partitions", type=int, default=None,
-                   help="buckets per Spark job (failure domain); default all pending")
+                   help="buckets per Spark job (failure domain); default all "
+                        "pending. With --with-similarity the triples depend "
+                        "on it: TF-IDF idf and l2 norms are fit per batch")
     p.add_argument("--with-similarity", action="store_true",
-                   help="enable the TF-IDF fuzzy tier (off = exact tiers only)")
+                   help="enable the TF-IDF fuzzy tier (off = exact tiers only). "
+                        "Its idf and per-document l2 norms are fit over each "
+                        "batch's turns, so its links depend on "
+                        "--batch-partitions; the top-N, floor and percentile "
+                        "cuts are per document")
     p.add_argument("--checkpoint-dir", default=None,
                    help="durable stage-checkpoint root (HDFS/S3). Strongly "
                         "recommended on a real cluster: the default "
