@@ -42,6 +42,14 @@ TRANSCRIPTS_SCHEMA = T.StructType(
 )
 
 
+def literal_df(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """A literal table as a ``LocalTableScan`` (via pandas/Arrow): Python rows
+    give a ``Scan ExistingRDD`` that runs a Python-fed job on every scan."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows) if rows else [], schema)
+
+
 def lexicon_df(spark: SparkSession) -> DataFrame:
     """Ontology lexicon dimension: one row per (ont, kind, string).
 
@@ -60,7 +68,7 @@ def lexicon_df(spark: SparkSession) -> DataFrame:
             rows.append((ont, "synonym", syn.lower(), uri, styp))
         for code, dtyp in dbxs:
             rows.append((ont, "dbxref", code, uri, dtyp))
-    return spark.createDataFrame(rows, LEXICON_SCHEMA)
+    return literal_df(spark, rows, LEXICON_SCHEMA)
 
 
 def ancestors_df(spark: SparkSession) -> DataFrame:
@@ -71,25 +79,23 @@ def ancestors_df(spark: SparkSession) -> DataFrame:
     (clinical_concept_annotator.py:348-361); in graph form that is a join
     through this closure table.
     """
-    return spark.createDataFrame(
-        L.closure_pairs(), "uri string, ancestor_uri string"
-    )
+    return literal_df(spark, L.closure_pairs(), "uri string, ancestor_uri string")
 
 
 def mrconso_df(spark: SparkSession) -> DataFrame:
     """UMLS MRCONSO-shaped table (CUI, LANG, SAB, CODE) — unfiltered, raw."""
-    return spark.createDataFrame(L.MRCONSO_ROWS, "CUI string, LANG string, SAB string, CODE string")
+    return literal_df(spark, L.MRCONSO_ROWS, "CUI string, LANG string, SAB string, CODE string")
 
 
 def mrsty_df(spark: SparkSession) -> DataFrame:
     """UMLS MRSTY-shaped table (CUI, STY)."""
-    return spark.createDataFrame(L.MRSTY_ROWS, "CUI string, STY string")
+    return literal_df(spark, L.MRSTY_ROWS, "CUI string, STY string")
 
 
 def vocab_map_df(spark: SparkSession) -> DataFrame:
     """Vocabulary alias → canonical prefix map, one row per alias."""
     rows = [(alias, primary) for primary, aliases in L.VOCAB_MAP_ROWS for alias in aliases]
-    return spark.createDataFrame(rows, "alias string, primary string")
+    return literal_df(spark, rows, "alias string, primary string")
 
 
 def vocab_map_dict() -> dict[str, str]:

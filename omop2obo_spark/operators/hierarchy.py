@@ -379,7 +379,7 @@ def pagerank(
     und = symmetrize_edges(edges, src_col, dst_col)
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
     if checkpoint:
-        deg = deg.localCheckpoint(eager=True)
+        und, deg = und.localCheckpoint(eager=True), deg.localCheckpoint(eager=True)
     n = deg.count()
     if n == 0:
         return deg.select(F.col("src").alias("ent"), F.lit(0.0).alias("rank"))
@@ -438,7 +438,7 @@ def personalized_pagerank(
     und = symmetrize_edges(edges, src_col, dst_col)
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
     if checkpoint:
-        deg = deg.localCheckpoint(eager=True)
+        und, deg = und.localCheckpoint(eager=True), deg.localCheckpoint(eager=True)
     if deg.count() == 0:
         return deg.select(F.col("src").alias("ent"), F.lit(0.0).alias("rank"))
     seed_arr = F.array(*[F.lit(s) for s in seed_set])

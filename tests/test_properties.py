@@ -23,6 +23,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from omop2obo_spark.fixtures.generators import literal_df
 from omop2obo_spark.functions.normalize import normalize_source_codes
 from omop2obo_spark.functions.text import preprocess_tokens_expr, py_preprocess
 from omop2obo_spark.operators.similarity import ngrams, ngrams_expr
@@ -150,7 +151,7 @@ def test_dedup_clusters_matches_union_find(spark, pairs):
     from omop2obo_spark.operators.dedup import dedup_clusters
 
     norm = [(min(a, b), max(a, b)) for a, b in pairs]
-    df = spark.createDataFrame(norm, "a long, b long")
+    df = literal_df(spark, norm, "a long, b long")
     got = {r.doc_id: r.component for r in dedup_clusters(df).collect()}
     assert got == _uf_components(norm)
 
@@ -305,9 +306,8 @@ def test_salted_join_equals_plain_join_property(spark, fact, dim, how, buckets):
     of result rows must equal the plain join's."""
     from omop2obo_spark.operators.joins import salted_join
 
-    fdf = spark.createDataFrame(fact, "id long, k string")
-    ddf = spark.createDataFrame(dim, "k string, v long") if dim else \
-        spark.createDataFrame([], "k string, v long")
+    fdf = literal_df(spark, fact, "id long, k string")
+    ddf = literal_df(spark, dim, "k string, v long")
     salted = salted_join(fdf, ddf, "k", salt_buckets=buckets,
                          fact_salt_cols=["id"], how=how)
     plain = fdf.join(F.broadcast(ddf), on="k", how=how)
@@ -408,10 +408,8 @@ def test_dedup_against_bloom_property(spark, corpus_texts, new_texts, m_bits):
     from omop2obo_spark.operators.dedup import dedup_against, dedup_against_bloom
 
     schema = "doc_id long, text string"
-    corpus = spark.createDataFrame(
-        [(100 + i, t) for i, t in enumerate(corpus_texts)], schema
-    )
-    new = spark.createDataFrame(list(enumerate(new_texts)), schema)
+    corpus = literal_df(spark, [(100 + i, t) for i, t in enumerate(corpus_texts)], schema)
+    new = literal_df(spark, list(enumerate(new_texts)), schema)
     want = sorted(r["doc_id"] for r in dedup_against(new, corpus).collect())
     got = sorted(
         r["doc_id"]
@@ -441,7 +439,7 @@ def test_edit_distance_join_lossless_property(spark, texts, k, q):
 
     from omop2obo_spark.operators.dedup import edit_distance_join
 
-    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id: long, text: string")
+    docs = literal_df(spark, list(enumerate(texts)), "doc_id: long, text: string")
     got = {
         (r.a, r.b, r.dist)
         for r in edit_distance_join(docs, max_dist=k, q=q).collect()
