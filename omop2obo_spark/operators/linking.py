@@ -68,16 +68,10 @@ def localize_dim_checked(df: DataFrame, max_rows: int = 500_000) -> tuple[DataFr
     rows = df.limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         return df.persist(), False
-    spark = df.sparkSession
-    try:
-        import pandas as pd
+    import pandas as pd
 
-        pdf = pd.DataFrame(rows, columns=df.columns)
-        return spark.createDataFrame(pdf, df.schema), True
-    except Exception:
-        # fallback: parallelized local rows (still correct, just not a
-        # LocalTableScan)
-        return spark.createDataFrame(rows, df.schema), True
+    pdf = pd.DataFrame(rows, columns=df.columns)
+    return df.sparkSession.createDataFrame(pdf, df.schema), True
 
 
 @dataclass
@@ -106,7 +100,12 @@ class LexiconDims:
     ) -> LinkDim:
         """The link dimension for these views, MRCONSO, MRSTY and vocab map;
         built on first use and kept while the same objects come back, so a
-        partitioned run's batches share one build."""
+        partitioned run's batches share one build.
+
+        :func:`~omop2obo_spark.plans.pipeline.run_pipeline` calls it on a
+        second thread, concurrently with its mention scan. The cache is not
+        locked: run only one ``run_pipeline`` per ``LexiconDims`` at a
+        time."""
         built = self._link_dim
         src = built.sources if built is not None else None
         if src is None or src[0] is not mrconso or src[1] is not mrsty or src[2] != vocab_map:
@@ -348,6 +347,12 @@ class LinkDim:
     semtypes: DataFrame | None
     salt_buckets: int | None  # None: broadcast
     sources: tuple  # (mrconso, mrsty, vocab_map) it was built from
+    persisted: tuple  # the frames the build persisted above the budget
+
+    def unpersist(self) -> None:
+        """Release every frame the build persisted (see :attr:`persisted`)."""
+        for df in self.persisted:
+            df.unpersist()
 
     def lookup(self, keys: DataFrame, dim: DataFrame, key_cols: list[str]) -> DataFrame:
         """Inner-join ``keys`` (key_cols + LINK_KEY_COLS) with ``dim``."""
@@ -370,18 +375,43 @@ def build_link_dim(
     the reference's clinical rows (data_utils.py:44-81): the code (src_rank
     0), a ``umls:c…`` code's bare CUI (1), its UMLS merge-1/2 codes (2) and
     CUIs (3). Term keys are the lower-cased dictionary strings.
+
+    Every frame that several plans read (the MRCONSO view, the code key
+    domain, the UMLS map and the ranked code stack) is localized once, so
+    the plans after it broadcast a LocalTableScan instead of re-planning
+    and re-running its subtree. Above ``max_rows`` a frame comes back
+    persisted instead (kept in :attr:`LinkDim.persisted`), and its flag
+    picks the join that reads it: a persisted MRCONSO view salts the UMLS
+    merges, a persisted ``links`` or ``semtypes`` salts the mention
+    lookup. The code domain, UMLS map and stack are never a join's build
+    side; they are localized only while the MRCONSO view fit, since each
+    holds the view's codes and above it would only add a budget-sized
+    collect and a cache.
     """
     key = ["LINK_KEY"]
     umls, strategy = None, "broadcast"
+    persisted: list[DataFrame] = []
+
+    def localized(df: DataFrame) -> tuple[DataFrame, bool]:
+        df, fits = localize_dim_checked(df, max_rows)
+        if not fits:
+            persisted.append(df)
+        return df, fits
+
+    def shared(df: DataFrame) -> DataFrame:
+        return localized(df)[0] if strategy == "broadcast" else df
+
     if mrconso is not None:
-        umls, fits = localize_dim_checked(prepare_mrconso(mrconso, vocab_map), max_rows)
+        umls, fits = localized(prepare_mrconso(mrconso, vocab_map))
         strategy = "broadcast" if fits else "salted"
     codes = dims.dbxref.select("CODE")
     if umls is not None:
         codes = codes.unionByName(umls.select("CODE")).unionByName(
             umls.select(F.concat(F.lit("umls:"), F.lower("CUI")).alias("CODE"))
         )
-    codes = codes.where(F.col("CODE").isNotNull()).distinct().withColumn("LINK_KEY", F.col("CODE"))
+    codes = shared(
+        codes.where(F.col("CODE").isNotNull()).distinct().withColumn("LINK_KEY", F.col("CODE"))
+    )
 
     def stacked(df: DataFrame, code: str, code_column: str, rank: int) -> DataFrame:
         return df.select(
@@ -399,9 +429,9 @@ def build_link_dim(
     )
     semtypes = None
     if umls is not None and mrsty is not None:
-        umls_map = umls_annotate(
+        umls_map = shared(umls_annotate(
             codes, umls, mrsty, key, "CODE", strategy=strategy, salt_buckets=salt_buckets
-        )
+        ))
         # merge 2 yields one row per SAB of a CUI; the min-rank groupBy pins
         # each (key, CODE, CODE_COLUMN)'s rank and collapses that fan-out
         stack = (
@@ -414,6 +444,9 @@ def build_link_dim(
             umls_map.select(*key, "UMLS_CUI", "UMLS_SEM_TYPE"),
             key, ["UMLS_CUI", "UMLS_SEM_TYPE"], ["UMLS_CUI"],
         ).select(F.lit("code").alias("kind"), *key, "UMLS_CUI", "UMLS_SEM_TYPE")
+    if umls is not None:
+        # dbxref_link reads it twice: the direct and the ananke branch
+        stack = shared(stack)
     terms = dims.strings.select("CODE").distinct().withColumn("LINK_KEY", F.col("CODE"))
     terms = stacked(terms, "CODE", "MENTION_LABEL", 0)
     links = (
@@ -421,8 +454,11 @@ def build_link_dim(
         .unionByName(exact_string_link(terms, dims, key, "concept").withColumn("kind", F.lit("term")))
         .select(*LINK_KEY_COLS, *LINK_VALUE_COLS)
     )
-    links, fits = localize_dim_checked(links, max_rows)
+    links, fits = localized(links)
     if semtypes is not None:
-        semtypes, sty_fits = localize_dim_checked(semtypes, max_rows)
+        semtypes, sty_fits = localized(semtypes)
         fits = fits and sty_fits
-    return LinkDim(links, semtypes, None if fits else salt_buckets, (mrconso, mrsty, vocab_map))
+    return LinkDim(
+        links, semtypes, None if fits else salt_buckets, (mrconso, mrsty, vocab_map),
+        tuple(persisted),
+    )

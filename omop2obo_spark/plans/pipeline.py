@@ -29,10 +29,12 @@ relies on it to keep the mention-derived triples out of the distinct.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from omop2obo_spark.config import (
     BROADCAST_DIM_MAX_ROWS,
@@ -189,7 +191,7 @@ def run_pipeline(
             return spark.read.parquet(path)
         return df.localCheckpoint(eager=True)
 
-    # ---- stage 1: mention detection -------------------------------------
+    # ---- stage 1: mention detection, with the link dimension alongside --
     # EAGER stage-boundary checkpoint. Lineage truncation must happen
     # before downstream plans are *constructed*, not just executed:
     # Catalyst re-analyzes the full subtree on every DataFrame call, and
@@ -197,15 +199,31 @@ def run_pipeline(
     # (measured ~47 s at 1M turns — it was the scaling-efficiency killer,
     # since it doesn't shrink with more cores). Eager materialization
     # converts it into parallel cluster work.
-    mentions = _checkpoint(
-        detect_mentions(transcripts, term_dim, MAX_TERM_TOKENS), "mentions"
-    )
+    #
+    # The link dimension (stage 2's only input besides the mentions) does
+    # not depend on the transcripts, so the first batch builds it on a
+    # second thread while the mention scan runs: its planning and its tiny
+    # jobs overlap the scan instead of following it; later batches find it
+    # built. The thread inherits the caller's local properties (job group,
+    # scheduler pool) and session tags; a build error is raised here, after
+    # the checkpoint. ``dims`` caches the one build, so only one
+    # run_pipeline per ``dims`` may run at a time.
+    with ThreadPoolExecutor(max_workers=1, thread_name_prefix="link-dim") as pool:
+        building = pool.submit(
+            inheritable_thread_target(spark)(dims.link_dim),
+            mrconso, mrsty, vocab_map, BROADCAST_DIM_MAX_ROWS, SALT_BUCKETS,
+        )
+        mentions = _checkpoint(
+            detect_mentions(transcripts, term_dim, MAX_TERM_TOKENS), "mentions"
+        )
 
     # ---- stage 2: entity linking: one lookup per mention ----------------
     # every tier depends only on the mention's normalized code or lower-
     # cased surface, so the tiers run once, in the link dimension, and the
-    # fact side joins it once (operators/linking.py build_link_dim)
-    link_dim = dims.link_dim(mrconso, mrsty, vocab_map, BROADCAST_DIM_MAX_ROWS, SALT_BUCKETS)
+    # fact side joins it once (operators/linking.py build_link_dim); the
+    # dimension was built concurrently with stage 1, so one run_pipeline
+    # per ``dims`` at a time
+    link_dim = building.result()
     keys = mentions.select(
         *KEY_COLS, "kind", "pos",
         F.when(F.col("kind") == "code", normalize_source_codes(F.col("surface"), vocab_map))

@@ -17,7 +17,9 @@ backfill. Two modes:
   can't express. Every one writes through :func:`_overwrite_batch`: its
   output is PARTITIONED BY batch_id with dynamic partition overwrite, so
   a replayed micro-batch (foreachBatch is at-least-once) replaces its own
-  partition instead of appending a second copy.
+  partition instead of appending a second copy. A query on a fresh
+  checkpoint renumbers its batches from 0 over every input file, so its
+  batch 0 first clears those partitions (:func:`_clear_batches`).
 
 All default to ``Trigger.AvailableNow`` — drain what exists, then stop —
 which is also how the tests drive them deterministically.
@@ -34,6 +36,7 @@ from omop2obo_spark.functions.normalize import normalize_source_codes
 from omop2obo_spark.operators.linking import LINK_VALUE_COLS, LexiconDims
 from omop2obo_spark.plans.mention import CODE_PATTERN
 from omop2obo_spark.plans.pipeline import KEY_COLS, run_pipeline
+from omop2obo_spark.sources.writers import hadoop_path
 
 
 def _code_mention_keys(stream: DataFrame, vocab_map: dict[str, str]) -> DataFrame:
@@ -81,6 +84,24 @@ def _overwrite_batch(df: DataFrame, batch_id: int, path: str) -> None:
         .mode("overwrite")
         .parquet(path)
     )
+
+
+def _clear_batches(spark: SparkSession, *paths: str) -> None:
+    """Delete the :func:`_overwrite_batch` partitions (``batch_id`` >= 0)
+    under ``paths``. Each sink calls it when its batch 0 runs, which only
+    happens while the checkpoint has no commit: the query regroups every
+    input file from batch 0, so an earlier lineage's partitions would stay
+    beside the new ones and duplicate their rows (a retried batch 0 finds
+    only its own partial partition). Other partitions (a seeded
+    ``batch_id=-1`` ledger) stay."""
+    for path in paths:
+        root, fs = hadoop_path(path, spark)
+        if not fs.exists(root):
+            continue
+        for status in fs.listStatus(root):
+            name = status.getPath().getName()
+            if name.startswith("batch_id=") and not name.startswith("batch_id=-"):
+                fs.delete(status.getPath(), True)
 
 
 def stream_code_mentions(
@@ -190,10 +211,16 @@ def stream_triples(
     files appended to ``input_dir`` are picked up on the next trigger.
     Each batch's triples overwrite its ``batch_id`` partition
     (:func:`_overwrite_batch`), so a replayed batch does not duplicate them.
+
+    A fresh checkpoint reprocesses, and replaces, everything under
+    ``output_dir``: its batch 0 deletes the earlier ``batch_id``
+    partitions, so ``input_dir`` must still hold every earlier file.
     """
     dims = LexiconDims.from_lexicon(lexicon, vocab_map)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            _clear_batches(spark, output_dir)
         if batch_df.isEmpty():
             return
         res = run_pipeline(
@@ -357,6 +384,10 @@ def stream_drift_monitor(
     batch operator. Baseline categories with no traffic in a window get
     an emitted row too (q floored at eps) — silence on a formerly-major
     source IS drift.
+
+    A fresh checkpoint reprocesses, and replaces, everything under
+    ``output_dir``: its batch 0 deletes the earlier ``batch_id``
+    partitions, so ``input_dir`` must still hold every earlier file.
     """
     from omop2obo_spark.operators.analysis import (
         psi_category_shares,
@@ -382,6 +413,8 @@ def stream_drift_monitor(
     ).agg(F.count("*").alias("n"))
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            _clear_batches(spark, output_dir)
         if batch_df.isEmpty():
             return
         w_tot = batch_df.groupBy("win").agg(F.sum("n").alias("__t"))
@@ -461,6 +494,13 @@ def stream_dedup_against(
     twice — the same overwrite-then-commit shape as the batch resume
     layer (plans/checkpoint.py).
 
+    A fresh checkpoint reprocesses, and replaces, everything under
+    ``output_dir`` and the ledger's kept-batch partitions: its batch 0
+    deletes the earlier ``batch_id`` >= 0 partitions of both, so
+    ``input_dir`` must still hold every earlier file, or the documents
+    kept from the missing files leave the output and the ledger (the
+    seeded ``batch_id=-1`` hashes stay).
+
     Scale shape: the per-batch ledger read scans hashes only (32 hex
     chars per distinct doc ever kept); the anti-join shuffles the batch
     on the hash, never its text; the within-batch canonical is
@@ -470,15 +510,19 @@ def stream_dedup_against(
     from omop2obo_spark.operators.dedup import exact_dedup, normalized_text
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            _clear_batches(spark, output_dir, ledger_dir)
         if batch_df.isEmpty():
             return
         # Only FULLY-COMMITTED earlier batches: a retried batch must not
         # anti-join against its own partially-committed ledger partition,
         # or docs whose hashes survived the partial commit would vanish
         # from the rewritten output partition. batch_id is the partition
-        # key, so this filter prunes at the source.
+        # key, so this filter prunes at the source. Read with its schema,
+        # a ledger with no partition yet (an empty seed, or one cleared for
+        # a fresh checkpoint) is empty instead of unreadable.
         ledger = (
-            spark.read.parquet(ledger_dir)
+            spark.read.schema("text_hash string, batch_id long").parquet(ledger_dir)
             .filter(F.col("batch_id") < F.lit(batch_id))
             .select("text_hash")
         )
@@ -533,8 +577,9 @@ def stream_heavy_hitters(
     Idempotency scope (same as the other foreachBatch ledgers): a RETRY
     of a micro-batch within one checkpoint lineage replaces its own
     partition byte-identically. Reprocessing from a FRESH checkpoint may
-    group the same files into different batch ids — clear the sketch dir
-    when restarting from scratch.
+    group the same files into different batch ids, so its batch 0 deletes
+    the sketch dir's earlier ``batch_id`` partitions: ``input_dir`` must
+    still hold every earlier file.
     """
     from omop2obo_spark.operators.sketch import cms_build
     from omop2obo_spark.operators.textstats import tokens
@@ -542,6 +587,8 @@ def stream_heavy_hitters(
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            _clear_batches(spark, sketch_dir)
         if batch_df.isEmpty():
             return
         toks = batch_df.select(

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from omop2obo_spark.fixtures.generators import literal_df
 from omop2obo_spark.operators.reasoner import (
     RDF_TYPE,
     RDFS_DOMAIN,
@@ -22,7 +23,7 @@ from omop2obo_spark.operators.reasoner import (
     split_schema,
 )
 
-TRIPLE = ["subj", "pred", "obj"]
+TRIPLE = "subj string, pred string, obj string"
 
 
 def _schema(spark):
@@ -34,7 +35,7 @@ def _schema(spark):
         ("ex:hasPet", RDFS_DOMAIN, "ex:Person"),
         ("ex:knows", RDFS_RANGE, "ex:Agent"),
     ]
-    return spark.createDataFrame(rows, TRIPLE)
+    return literal_df(spark, rows, TRIPLE)
 
 
 def _instance(spark):
@@ -42,7 +43,7 @@ def _instance(spark):
         ("ex:rex", RDF_TYPE, "ex:Dog"),
         ("ex:ann", "ex:hasPet", "ex:rex"),
     ]
-    return spark.createDataFrame(rows, TRIPLE)
+    return literal_df(spark, rows, TRIPLE)
 
 
 def test_rdfs_entail_full_closure(spark):
@@ -71,9 +72,7 @@ def test_rdfs_entail_full_closure(spark):
 def test_rdfs_entail_asserted_wins_over_derived(spark):
     # The derivable triple is ALSO asserted -> inferred must be False.
     inst = _instance(spark).unionByName(
-        _instance(spark).sparkSession.createDataFrame(
-            [("ex:ann", "ex:knows", "ex:rex")], TRIPLE
-        )
+        literal_df(spark, [("ex:ann", "ex:knows", "ex:rex")], TRIPLE)
     )
     out = rdfs_entail(inst, _schema(spark))
     row = out.filter(
@@ -97,15 +96,16 @@ def _shapes(spark):
         # every Dog must have exactly one (string-literal) name
         ("sh:DogName", "ex:Dog", "ex:name", 1, 1, "Literal", None),
     ]
-    cols = [
-        "shape_id", "target_class", "path", "min_count", "max_count",
-        "node_kind", "value_class",
-    ]
-    return spark.createDataFrame(rows, cols)
+    cols = (
+        "shape_id string, target_class string, path string, min_count long, "
+        "max_count long, node_kind string, value_class string"
+    )
+    return literal_df(spark, rows, cols)
 
 
 def test_shacl_validate_each_constraint_kind(spark):
-    inst = spark.createDataFrame(
+    inst = literal_df(
+        spark,
         [
             ("ex:ann", RDF_TYPE, "ex:Person"),   # ok: one pet, IRI, a Dog
             ("ex:bob", RDF_TYPE, "ex:Person"),   # minCount: no pets
@@ -142,11 +142,11 @@ def test_shacl_validate_each_constraint_kind(spark):
 
 def test_shacl_validate_over_entailed_graph_targets_subclasses(spark):
     # Targeting ex:Animal catches a Dog only AFTER entailment.
-    inst = spark.createDataFrame(
-        [("ex:rex", RDF_TYPE, "ex:Dog")], TRIPLE
+    inst = literal_df(
+        spark, [("ex:rex", RDF_TYPE, "ex:Dog")], TRIPLE
     )
-    shapes = spark.createDataFrame(
-        [("sh:AnimalName", "ex:Animal", "ex:name", 1, None, None, None)],
+    shapes = literal_df(
+        spark, [("sh:AnimalName", "ex:Animal", "ex:name", 1, None, None, None)],
         "shape_id string, target_class string, path string, min_count int, "
         "max_count int, node_kind string, value_class string",
     )
@@ -168,7 +168,7 @@ def _path_graph(spark):
         ("d", "p", "e"),
         ("b", "r", "d"),
     ]
-    return spark.createDataFrame(rows, TRIPLE)
+    return literal_df(spark, rows, TRIPLE)
 
 
 def test_path_query_sequence_and_star(spark):

@@ -37,6 +37,8 @@ import re
 import numpy as np
 import pytest
 
+from omop2obo_spark.fixtures.generators import literal_df
+
 nx = pytest.importorskip("networkx")
 
 
@@ -87,7 +89,7 @@ def test_pagerank_converged_matches_power_iteration(spark):
     from omop2obo_spark.operators.hierarchy import pagerank
 
     edges = _und_edges()
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {r.ent: r.rank for r in pagerank(df, iterations=60).collect()}
 
     g = nx.DiGraph()
@@ -115,7 +117,7 @@ def test_pagerank_fixed_iterations_match_numpy_google_matrix(spark):
     from omop2obo_spark.operators.hierarchy import pagerank
 
     edges = _und_edges(seed=13)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {r.ent: r.rank for r in pagerank(df, iterations=3).collect()}
 
     g = nx.DiGraph()
@@ -144,7 +146,7 @@ def test_hits_converged_matches_power_iteration(spark):
     from omop2obo_spark.operators.hierarchy import hits
 
     edges = _dir_edges()
-    df = spark.createDataFrame(edges, "src string, dst string")
+    df = literal_df(spark, edges, "src string, dst string")
     got = {r.ent: (r.hub, r.auth) for r in hits(df, iterations=60).collect()}
 
     g = nx.DiGraph(edges)
@@ -173,7 +175,7 @@ def test_hits_fixed_iterations_match_numpy(spark):
     from omop2obo_spark.operators.hierarchy import hits
 
     edges = _dir_edges(seed=3)
-    df = spark.createDataFrame(edges, "src string, dst string")
+    df = literal_df(spark, edges, "src string, dst string")
     got = {r.ent: (r.hub, r.auth) for r in hits(df, iterations=3).collect()}
 
     g = nx.DiGraph(edges)
@@ -203,7 +205,7 @@ def test_scc_partition_matches_networkx(spark):
         ("s0", "s1"), ("s1", "s2"), ("s2", "s3"), ("s3", "s0"),
         ("t0", "t1"), ("t1", "t0"),
     ]
-    df = spark.createDataFrame(edges, "src string, dst string")
+    df = literal_df(spark, edges, "src string, dst string")
     rows = scc_components(df).collect()
     by_id: dict[str, set[str]] = {}
     for r in rows:
@@ -219,7 +221,7 @@ def test_k_core_matches_networkx(spark):
     from omop2obo_spark.operators.hierarchy import k_core
 
     edges = _und_edges(seed=29, n_edges=70)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     g = nx.Graph(edges)
     for k in (2, 3):
         got = {r.ent: r.core_deg for r in k_core(df, k=k).collect()}
@@ -235,8 +237,8 @@ def test_sssp_matches_networkx_dijkstra(spark):
     rng = np.random.default_rng(31)
     base = _dir_edges(seed=17, n_edges=60)
     edges = [(a, b, float(round(rng.uniform(0.5, 5.0), 3))) for a, b in base]
-    df = spark.createDataFrame(edges, "src string, dst string, w double")
-    seeds = spark.createDataFrame([("d00",)], "ent string")
+    df = literal_df(spark, edges, "src string, dst string, w double")
+    seeds = literal_df(spark, [("d00",)], "ent string")
     got = {r.ent: r.dist for r in sssp(df, seeds).collect()}
 
     g = nx.DiGraph()
@@ -256,7 +258,7 @@ def test_adamic_adar_matches_networkx(spark):
     from omop2obo_spark.operators.hierarchy import adamic_adar
 
     edges = _und_edges(seed=37)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {(r.ent_a, r.ent_b): (r.aa_score, r.linked)
            for r in adamic_adar(df).collect()}
 
@@ -275,7 +277,7 @@ def test_triangles_match_networkx(spark):
     from omop2obo_spark.operators.hierarchy import triangle_counts
 
     edges = _und_edges(seed=41, n_edges=80)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {r.ent: (r.degree, r.n_triangles, r.clustering)
            for r in triangle_counts(df).collect()}
 
@@ -306,7 +308,7 @@ def test_transe_distance_matches_hashlib_numpy(spark):
 
     triples = [("ent:a", "rel:p", "ent:b"), ("ent:x", "rel:q", "ent:y"),
                ("c", "r", "c")]
-    df = spark.createDataFrame(triples, "subj string, pred string, obj string")
+    df = literal_df(spark, triples, "subj string, pred string, obj string")
     got = {
         (r.subj, r.pred, r.obj): r.d
         for r in df.select(
@@ -333,7 +335,7 @@ def test_poisson_bootstrap_matches_hashlib_numpy(spark):
     rng = np.random.default_rng(43)
     vals = rng.normal(10.0, 2.0, size=120).round(4)
     rows = [(i, float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "doc_id long, x double")
+    df = literal_df(spark, rows, "doc_id long, x double")
     got = poisson_bootstrap_ci(df, "x", n_replicates=80, alpha=0.1).collect()[0]
 
     # independently recomputed Poisson(1) CDF thresholds (math, not the
@@ -426,8 +428,8 @@ def test_bpe_train_matches_naive_sennrich(spark):
         "low lower lowest newer newest wide widest",
         "aaa aaaa abab ababab the theory there then",
     ] * 3
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "doc_id long, text string")
+    df = literal_df(spark, [(i, t) for i, t in enumerate(texts)],
+                    "doc_id long, text string")
     got = bpe_train(df, n_merges=18)
     want = _naive_bpe(texts, 18)
     assert got == want, (got[:5], want[:5])
@@ -446,7 +448,7 @@ def test_personalized_pagerank_matches_numpy(spark):
 
     edges = _und_edges(seed=47)
     seeds = ["n00", "n03"]
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {r.ent: r.rank for r in
            personalized_pagerank(df, seeds, iterations=3).collect()}
 
@@ -469,8 +471,8 @@ def test_k_hop_matches_networkx_bfs(spark):
     from omop2obo_spark.operators.hierarchy import k_hop
 
     edges = _und_edges(seed=53, n_edges=50)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
-    seeds = spark.createDataFrame([("n01",), ("n17",)], "ent string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
+    seeds = literal_df(spark, [("n01",), ("n17",)], "ent string")
     for k in (1, 2, 3):
         got = {r.ent: r.hop for r in k_hop(df, seeds, k=k).collect()}
         g = nx.Graph(edges)
@@ -499,7 +501,7 @@ def test_ancestor_closure_matches_networkx_descendants(spark):
         for i, j in rng.integers(0, n, size=(90, 2))
         if i < j  # DAG: edges point to higher ids ("ancestors")
     })
-    df = spark.createDataFrame(edges, "uri string, parent_uri string")
+    df = literal_df(spark, edges, "uri string, parent_uri string")
     got = {(r.uri, r.ancestor_uri) for r in ancestor_closure(df).collect()}
 
     g = nx.DiGraph(edges)
@@ -517,7 +519,7 @@ def test_ancestor_closure_cyclic_matches_networkx(spark):
     edges = sorted(set(_dir_edges(seed=61, n_edges=40) + [
         ("d01", "d02"), ("d02", "d03"), ("d03", "d01"),
     ]))
-    df = spark.createDataFrame(edges, "uri string, parent_uri string")
+    df = literal_df(spark, edges, "uri string, parent_uri string")
     got = {(r.uri, r.ancestor_uri) for r in ancestor_closure(df).collect()}
     g = nx.DiGraph(edges)
     want = {(u, a) for u in g.nodes for a in nx.descendants(g, u)}
@@ -537,7 +539,7 @@ def test_neighbor_jaccard_matches_networkx(spark):
     from omop2obo_spark.operators.hierarchy import neighbor_jaccard
 
     edges = _und_edges(seed=67, n_edges=70)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {(r.ent_a, r.ent_b): (r.shared, r.jaccard)
            for r in neighbor_jaccard(df).collect()}
 
@@ -566,7 +568,7 @@ def test_cycle_members_matches_networkx(spark):
         ("y0", "y1"), ("y1", "y0"),                  # 2-cycle
         ("x2", "y0"),                                # bridge, no new cycle
     ]))
-    df = spark.createDataFrame(edges, "uri string, parent_uri string")
+    df = literal_df(spark, edges, "uri string, parent_uri string")
     got = {r.uri: r.cycle_len for r in cycle_members(df).collect()}
 
     g = nx.DiGraph(edges)
@@ -588,7 +590,7 @@ def test_degree_distribution_matches_numpy_mle(spark):
     from omop2obo_spark.operators.hierarchy import degree_distribution
 
     edges = _und_edges(seed=73, n_edges=80)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     rows = degree_distribution(df).collect()
 
     g = nx.Graph(edges)
@@ -624,7 +626,7 @@ def test_dedup_clusters_both_paths_match_networkx(spark):
     # long chain: c000-c001-...-c039 (diameter 39 → pointer jumping matters)
     chain = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(39)]
     all_pairs = sorted(set(pairs + chain))
-    df = spark.createDataFrame(all_pairs, "a string, b string")
+    df = literal_df(spark, all_pairs, "a string, b string")
 
     g = nx.Graph(all_pairs)
     want = {}
@@ -653,8 +655,8 @@ def test_fs_score_matches_python_log_odds(spark):
         (i, bool(a), bool(b), bool(c))
         for i, (a, b, c) in enumerate(itertools.product([0, 1], repeat=3))
     ]
-    df = spark.createDataFrame(
-        rows, "pair_id long, agree_name boolean, agree_dob boolean, agree_zip boolean"
+    df = literal_df(
+        spark, rows, "pair_id long, agree_name boolean, agree_dob boolean, agree_zip boolean"
     )
     got = {r.pair_id: (r.weight, r.decision)
            for r in fs_score(df, params, upper=5.0, lower=-5.0).collect()}
@@ -684,7 +686,7 @@ def test_link_prediction_metrics_match_hashlib_numpy(spark):
     trip = [
         (f"e{i % 7}", f"r{i % 3}", f"e{(i * 5 + 2) % 11}") for i in range(40)
     ]
-    df = spark.createDataFrame(sorted(set(trip)), "subj string, pred string, obj string")
+    df = literal_df(spark, sorted(set(trip)), "subj string, pred string, obj string")
     got = {r.pred: r.asDict() for r in
            link_prediction_metrics(df, k=8, hits_at=(1, 3)).collect()}
 
@@ -736,7 +738,7 @@ def test_label_propagation_matches_python_replay(spark):
     from omop2obo_spark.operators.hierarchy import label_propagation
 
     edges = _und_edges(seed=83, n_edges=65)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     for iters in (1, 3, 5):
         got = {r.ent: r.community
                for r in label_propagation(df, iterations=iters).collect()}
@@ -770,7 +772,7 @@ def test_deterministic_walks_match_hashlib_replay(spark):
     from omop2obo_spark.operators.hierarchy import deterministic_walks
 
     edges = _und_edges(seed=89, n_edges=45)
-    df = spark.createDataFrame(edges, "ent_a string, ent_b string")
+    df = literal_df(spark, edges, "ent_a string, ent_b string")
     got = {r.start: r.path for r in deterministic_walks(df, walk_len=4).collect()}
 
     adj: dict = {}
@@ -811,8 +813,8 @@ def test_entity_cooccurrence_pmi_matches_python(spark):
     from omop2obo_spark.operators.hierarchy import entity_cooccurrence
 
     convs, rows, _ = _tiny_mapping_triples()
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, subj string, pred string, obj string"
+    df = literal_df(
+        spark, rows, "conv_id string, turn_idx int, subj string, pred string, obj string"
     )
     got = {(r.ent_a, r.ent_b): (r.n_convs, r.pmi)
            for r in entity_cooccurrence(df).collect()}
@@ -840,10 +842,10 @@ def test_resnik_similarity_matches_python(spark):
     from omop2obo_spark.operators.hierarchy import resnik_similarity
 
     convs, rows, closure = _tiny_mapping_triples()
-    tri = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, subj string, pred string, obj string"
+    tri = literal_df(
+        spark, rows, "conv_id string, turn_idx int, subj string, pred string, obj string"
     )
-    cl = spark.createDataFrame(closure, "ent string, anc string")
+    cl = literal_df(spark, closure, "ent string, anc string")
     got = {(r.ent_a, r.ent_b): r.resnik for r in resnik_similarity(tri, cl).collect()}
 
     assertions = [e for ents in convs.values() for e in ents]

@@ -102,6 +102,17 @@ def test_stream_triples_foreachbatch(spark, tmp_path):
     q.awaitTermination(180)
     assert spark.read.parquet(out).count() == n2
 
+    # a fresh checkpoint regroups both files into one batch 0, which
+    # clears the older batch partitions instead of keeping them beside it;
+    # building the query deletes nothing
+    fresh_query = stream_triples(spark, src, out, str(tmp_path / "ckpt2-fresh"), lex, vm)
+    assert spark.read.parquet(out).select("batch_id").distinct().count() >= 2
+    q = fresh_query.start()
+    q.awaitTermination(180)
+    fresh = spark.read.parquet(out)
+    assert fresh.count() == n2
+    assert [r.batch_id for r in fresh.select("batch_id").distinct().collect()] == [0]
+
 
 def test_stateful_conversation_tracking_survives_restart(spark, tmp_path):
     """applyInPandasWithState: per-conversation state accumulates across
