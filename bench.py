@@ -2,8 +2,8 @@
 """Benchmark harness.
 
 Default mode: run every ``queries()`` entry at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32)
-and print ONE JSON line:
+(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+CPUs this process may run on) and print ONE JSON line:
 
     {"metric": "total_wall_sec", "value": N, "unit": "sec",
      "queries": {...per-query sec...}, "sf": 0.1,
@@ -32,7 +32,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def _sf_from_dir(d: str) -> float:

@@ -459,43 +459,24 @@ def psi_drift(
     if eps <= 0:
         raise ValueError(f"eps must be positive, got {eps}")
 
-    joined = psi_category_shares(baseline, cat_col, "p").join(
-        psi_category_shares(actual, cat_col, "q"), on="cat", how="full"
-    )
-    return joined.select("cat", *psi_term_columns(eps, round_dp))
+    def shares(frame: DataFrame, name: str) -> DataFrame:
+        c = frame.groupBy(
+            F.coalesce(F.col(cat_col).cast("string"), F.lit("__null__")).alias("cat")
+        ).agg(F.count("*").alias("__n"))
+        tot = c.agg(F.sum("__n").alias("__t"))
+        return c.crossJoin(F.broadcast(tot)).select(
+            "cat", (F.col("__n") / F.col("__t")).alias(name)
+        )
 
-
-def psi_category_shares(frame: DataFrame, cat_col: str, name: str) -> DataFrame:
-    """``(cat, <name>)`` share dimension for PSI: map-side-combined count
-    per category (NULL → ``'__null__'`` bucket) divided by a 1-row
-    broadcast total. Shared by :func:`psi_drift` and the streaming face
-    (``streaming.incremental.stream_drift_monitor``) so the two can never
-    drift apart arithmetically.
-    """
-    c = frame.groupBy(
-        F.coalesce(F.col(cat_col).cast("string"), F.lit("__null__")).alias("cat")
-    ).agg(F.count("*").alias("__n"))
-    tot = c.agg(F.sum("__n").alias("__t"))
-    return c.crossJoin(F.broadcast(tot)).select(
-        "cat", (F.col("__n") / F.col("__t")).alias(name)
-    )
-
-
-def psi_term_columns(eps: float, round_dp: int = 9) -> list[Column]:
-    """The PSI output columns ``[p, q, psi_term]`` over input columns
-    ``p``/``q`` (either may be NULL from a full-outer join): both floored
-    at ``eps``, term ``(p - q) * ln(p / q)``, all rounded to ``round_dp``.
-    One definition for the batch operator and the streaming monitor —
-    the streaming docstring's "batch-identical eps/ln arithmetic"
-    guarantee is enforced here, not by copy-paste.
-    """
+    joined = shares(baseline, "p").join(shares(actual, "q"), on="cat", how="full")
     p = F.greatest(F.coalesce(F.col("p"), F.lit(0.0)), F.lit(float(eps)))
     q = F.greatest(F.coalesce(F.col("q"), F.lit(0.0)), F.lit(float(eps)))
-    return [
+    return joined.select(
+        "cat",
         F.round(p, round_dp).alias("p"),
         F.round(q, round_dp).alias("q"),
         F.round((p - q) * F.log(p / q), round_dp).alias("psi_term"),
-    ]
+    )
 
 
 def table_profile(

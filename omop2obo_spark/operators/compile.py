@@ -33,6 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from omop2obo_spark.config import (
+    CAT_AUTO_CONSTRUCTOR_ANCESTOR,
+    CAT_AUTO_CONSTRUCTOR_CONCEPT,
+    CAT_AUTO_EXACT_ANCESTOR,
+    CAT_AUTO_EXACT_CONCEPT,
+    CAT_MANUAL_EXACT_SIMILARITY,
+)
 from omop2obo_spark.functions.normalize import uri_short_id
 
 
@@ -146,10 +153,10 @@ def compile_exact_mappings(links: DataFrame, key_cols: list[str], level_col: str
         & evid_str.contains("ANCESTOR_LABEL")
     )
     category = (
-        F.when(~anc & (n_uri > 1), "Automatic Constructor - Concept")
-        .when(~anc, "Automatic Exact - Concept")
-        .when(n_uri > 1, "Automatic Constructor - Ancestor")
-        .otherwise("Automatic Exact - Ancestor")
+        F.when(~anc & (n_uri > 1), CAT_AUTO_CONSTRUCTOR_CONCEPT)
+        .when(~anc, CAT_AUTO_EXACT_CONCEPT)
+        .when(n_uri > 1, CAT_AUTO_CONSTRUCTOR_ANCESTOR)
+        .otherwise(CAT_AUTO_EXACT_ANCESTOR)
     )
     return agg.select(
         *grp,
@@ -216,8 +223,8 @@ def compile_similarity_mappings(
             F.array_distinct(F.filter(vals, lambda v: v.isNotNull() & (v != ""))), " | "
         )
 
-    category = F.when(F.size(F.col("__kept")) > 1, "Automatic Constructor - Concept").otherwise(
-        "Manual Exact - Concept Similarity"
+    category = F.when(F.size(F.col("__kept")) > 1, CAT_AUTO_CONSTRUCTOR_CONCEPT).otherwise(
+        CAT_MANUAL_EXACT_SIMILARITY
     )
     return agg.select(
         *grp,

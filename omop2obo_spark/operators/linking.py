@@ -4,7 +4,7 @@ matching — the Spark re-expression of the reference's ConceptAnnotator
 
 The tier functions are DataFrame→DataFrame and generic over the key
 columns: they serve the reference-parity path (key=CONCEPT_ID) and the
-link dimension, in which the batch and streaming paths look mentions up.
+link dimension, in which the pipeline looks mentions up.
 Every tier depends only on a mention's normalized code or lower-cased
 surface, never on its turn, so
 :func:`build_link_dim` runs them once over that key domain into one

@@ -38,6 +38,9 @@ from pyspark.util import inheritable_thread_target
 
 from omop2obo_spark.config import (
     BROADCAST_DIM_MAX_ROWS,
+    CAT_AUTO_CONSTRUCTOR_ANCESTOR,
+    CAT_AUTO_CONSTRUCTOR_CONCEPT,
+    CAT_MANUAL_EXACT_SIMILARITY,
     COMPILE_THRESHOLD,
     MAX_TERM_TOKENS,
     PRED_CATEGORY,
@@ -391,8 +394,11 @@ def build_triples(
     # ~30 s of pure analyzer time on the sandbox before this rewrite.
     def block_pairs(uri_col: str, cat_col: str, evid_col: str, pred_exact: str):
         pred = (
-            F.when(F.col(cat_col).startswith("Automatic Constructor"), F.lit(PRED_CONSTRUCTOR))
-            .when(F.col(cat_col) == "Manual Exact - Concept Similarity", F.lit(PRED_SIMILARITY))
+            F.when(
+                F.col(cat_col).isin(CAT_AUTO_CONSTRUCTOR_CONCEPT, CAT_AUTO_CONSTRUCTOR_ANCESTOR),
+                F.lit(PRED_CONSTRUCTOR),
+            )
+            .when(F.col(cat_col) == CAT_MANUAL_EXACT_SIMILARITY, F.lit(PRED_SIMILARITY))
             .otherwise(F.lit(pred_exact))
         )
         present = F.col(uri_col).isNotNull() & (F.col(uri_col) != "")

@@ -37,7 +37,7 @@ def test_pyfiles_zip_contains_package_only(tmp_path):
     assert not any("__pycache__" in n or n.startswith("tests/") for n in names)
     # every package subdir made it in
     pkgs = {n.split("/")[1] for n in names if n.count("/") == 2}
-    assert {"operators", "sources", "functions", "plans", "streaming"} <= pkgs
+    assert {"operators", "sources", "functions", "plans"} <= pkgs
 
 
 def test_submit_args_defaults_and_resume_contract():
@@ -52,9 +52,10 @@ def test_submit_args_defaults_and_resume_contract():
     assert (b.buckets, b.batch_partitions, b.with_similarity, b.run_id) == (8, 2, True, "r1")
 
 
-def _submit(tmp_path, out_dir: str, *extra: str):
+def _submit(tmp_path, out_dir: str, *extra: str, master: str = "local[4]"):
     """``(cmd, env)`` of the real launch shape: package --py-files, then
-    ``spark-submit tools/submit_job.py`` on sf0.001 into ``out_dir``."""
+    ``spark-submit --master <master> tools/submit_job.py`` on sf0.001 into
+    ``out_dir``."""
     import shutil
 
     import pytest
@@ -63,7 +64,7 @@ def _submit(tmp_path, out_dir: str, *extra: str):
         pytest.skip("spark-submit not on PATH")
     zip_path = build(str(tmp_path / "pkg.zip"))
     cmd = [
-        "spark-submit", "--master", "local[4]", "--py-files", zip_path,
+        "spark-submit", "--master", master, "--py-files", zip_path,
         os.path.join(REPO, "tools", "submit_job.py"),
         "--transcripts", SF, "--output", out_dir, "--lexicon", "fixture", *extra,
     ]
@@ -148,6 +149,34 @@ def test_spark_submit_killed_mid_run_resumes_to_clean_output(spark, tmp_path):
 
     audit = {r.part_id: r for r in manifest_audit(spark, GraphSink(out_dir)).collect()}
     assert audit[1].attempts >= 2 and audit[1].last_status == "done"
+
+
+def test_spark_submit_one_core_with_similarity_matches_in_process_triples(spark, tmp_path):
+    """The triple set does not depend on the core count with the TF-IDF
+    tier on: ``spark-submit --master local[1]`` writes exactly the triples
+    that ``run_pipeline`` gives in the multi-core test session. One bucket
+    is one batch over every turn, so both sides fit TF-IDF over the same
+    corpus."""
+    from omop2obo_spark.fixtures.generators import (
+        lexicon_df,
+        transcripts_from_documents,
+        vocab_map_dict,
+    )
+    from omop2obo_spark.plans.pipeline import run_pipeline
+
+    out_dir = str(tmp_path / "graph")
+    cmd, env = _submit(
+        tmp_path, out_dir, "--buckets", "1", "--with-similarity", master="local[1]"
+    )
+    assert _run(cmd, env)["processed"] == [0]
+
+    want = run_pipeline(
+        spark, transcripts_from_documents(spark, SF), lexicon_df(spark), vocab_map_dict(),
+        with_similarity=True,
+    ).triples.select("subj", "pred", "obj").collect()
+    got = GraphSink(out_dir).read_triples(spark).select("subj", "pred", "obj").collect()
+    assert len(got) == len(set(got))
+    assert set(got) == set(want)
 
 
 def test_is_sf_dir_probes_the_default_fs(spark, viewfs_default_fs):
